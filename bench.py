@@ -15,13 +15,13 @@ Phases measured:
                   block postings  (north metric: docs/sec)
   build_documents same index build over the driver's documents.parquet
   query_batch_*   all reference queries in one Spark job, both modes (QPS)
-  q1..q9          per-query latencies, disjunctive WAND top-10 (p50/p99)
+  q1..q9          per-query latencies, disjunctive top-10 (p50/p99)
 
 Scaling mode (north_rule evidence; writes BENCH/BASELINE.md):
     python bench.py --scaling
-  Runs the same job at local[8] and local[32] in fresh subprocesses on the
-  same input and reports throughput at both plus efficiency
-  (throughput32/throughput8)/4.
+  Runs the same job at two parallelism levels (local[2] and local[8] by
+  default; SPARK_GRAFT_SCALING_CPUS=a,b) in fresh subprocesses on the same
+  input and reports throughput at both plus the scaling efficiency.
 """
 
 from __future__ import annotations

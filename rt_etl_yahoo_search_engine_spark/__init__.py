@@ -20,7 +20,8 @@ Layout:
   sources/synth.py      deterministic webtext corpus generator
   operators/codec.py    delta-gap + varbyte block codec (numpy)
   operators/index_build.py  docmap/postings/lexicon/stats build pipeline
-  operators/topk.py     exhaustive scorer + block-max WAND top-k
+  operators/topk.py     vectorized batch scorer + exhaustive oracle
+  operators/unitscan.py the one per-unit posting scan under Spark plans
   plans/bm25.py         query-side planning (naive + optimized paths)
   streaming/ingest.py   Structured Streaming ingest (micro-batch parity)
 """

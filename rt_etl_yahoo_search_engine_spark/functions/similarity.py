@@ -406,17 +406,26 @@ def semdedup(
 # Envelope for _pq_train's BROADCAST-LITERAL assignment path (VERDICT r4
 # #5): the literal argmin builds an expression tree with one `sub`-float
 # array literal + dot fold PER CELL, i.e. O(m*codebook_k*sub) codegen
-# terms, re-planned every Lloyd's iteration.  Past a few thousand cells
-# that tree dominates planning time (and at 64x65536 it would be
-# unbuildable) — the same class of bound as the un-partitioned-window
-# rule.  Above this many cells (m*codebook_k) the assignment switches to
-# the BROADCAST-JOIN form below: centroids ride a broadcast DataFrame
-# instead of the expression tree, so plan size is O(1) in the codebook
-# and the only added cost is one narrow n*m-row exchange per iteration.
+# terms, re-planned every Lloyd's iteration.  Past a few thousand literal
+# floats that tree dominates planning time (and at 64x65536 cells it would
+# be unbuildable) — the same class of bound as the un-partitioned-window
+# rule.  The gate counts the literal FLOATS (m*codebook_k*sub), the
+# quantity the tree grows with, not cells: a wide subspace makes each
+# cell's literal proportionally bigger.  Above the bound the assignment
+# switches to the BROADCAST-JOIN form below: centroids ride a broadcast
+# DataFrame instead of the expression tree, so plan size is O(1) in the
+# codebook and the only added cost is one narrow n*m-row exchange per
+# iteration.
 # The per-iteration driver reduce stays O(m*codebook_k*sub) on BOTH
 # paths — that is the codebook itself (the model being trained), metadata
 # by definition.
-PQ_LITERAL_MAX_CELLS = 4096
+#
+# Every current caller keeps the path it took under the old 4096-cell
+# gate: the ann_pq_* entries and tests/test_pq_rescore.py (m=4, k=4 over
+# 64-dim vectors: 256 floats) and the small tests/test_kmeans.py cases
+# (16-24 floats) stay literal; test_pq_join_path_large_codebook (m=2,
+# k=2100, sub=2: 8400 floats) stays on the join.
+PQ_LITERAL_MAX_FLOATS = 4096
 
 
 def _pq_train(base, m: int, sub: int, codebook_k: int, iters: int):
@@ -435,14 +444,14 @@ def _pq_train(base, m: int, sub: int, codebook_k: int, iters: int):
     difference between 12 and 3 passes over a 10^12-vector table for
     the default m=4.
 
-    Assignment strategy is codebook-size-gated (PQ_LITERAL_MAX_CELLS):
-    up to that many cells the argmin is the zero-exchange broadcast-
-    literal expression; above it, `_pq_assign_join` — a broadcast join
-    against an (m, cell, centroid) DataFrame computing the IDENTICAL
-    dist2 expression (same fold order, same (dist2, cell) lexicographic
-    tie-break), so the two paths are value-identical (tested at a
-    forced threshold and at a natively-large codebook in
-    tests/test_kmeans.py)."""
+    Assignment strategy is codebook-size-gated (PQ_LITERAL_MAX_FLOATS):
+    up to that many literal centroid floats (m*codebook_k*sub) the argmin
+    is the zero-exchange broadcast-literal expression; above it,
+    `_pq_assign_join` — a broadcast join against an (m, cell, centroid)
+    DataFrame computing the IDENTICAL dist2 expression (same fold order,
+    same (dist2, cell) lexicographic tie-break), so the two paths are
+    value-identical (tested at a forced threshold and at a natively-large
+    codebook in tests/test_kmeans.py)."""
     seeds = [
         [float(x) for x in r["v"]]
         for r in base.filter(F.col("vec_id") < codebook_k)
@@ -479,7 +488,7 @@ def _pq_train(base, m: int, sub: int, codebook_k: int, iters: int):
             )
         return F.array(*per_m)
 
-    use_join = m * codebook_k > PQ_LITERAL_MAX_CELLS
+    use_join = m * codebook_k * sub > PQ_LITERAL_MAX_FLOATS
     for _ in range(iters):
         if use_join:
             best = _pq_assign_join(base, books, m, sub)
@@ -538,7 +547,7 @@ def _pq_train(base, m: int, sub: int, codebook_k: int, iters: int):
 def _pq_assign_join(base, books, m: int, sub: int):
     """(vec_id, m, cell, sv) — best PQ cell per (vector, subspace) via a
     broadcast join against an (m, cell, centroid, |c|²) DataFrame: the
-    large-codebook assignment path (see PQ_LITERAL_MAX_CELLS).
+    large-codebook assignment path (see PQ_LITERAL_MAX_FLOATS).
 
     Value-identical to `_cells_arr`'s broadcast-literal argmin: dist2 is
     the same `na - 2.0·ab + nb` with the same sequential DOT_EXPR fold

@@ -4,8 +4,8 @@ Classic IR varbyte (Manning/Raghavan/Schütze, "Introduction to Information
 Retrieval" §5.3): each integer is stored big-endian in 7-bit groups, one per
 byte; the LAST byte of each integer has its high bit set.  Doc-id lists are
 delta-gapped per block: the first doc_id of a block is stored absolute, the
-rest as gaps — every block is therefore independently decodable, which is
-what lets block-max WAND skip whole blocks without touching their bytes.
+rest as gaps — every block is therefore independently decodable, and a
+term's blocks concatenate into one decodable stream (decode_*_stream).
 
 Both encode and decode are vectorized over numpy arrays; no per-int Python
 loops in the hot path (decode runs inside the query operator, encode inside

@@ -35,17 +35,15 @@ two Arrow-batched Python stages (extraction+tokenization, block encoding):
        (c) makes query-time top-k embarrassingly parallel per shard —
            each shard holds COMPLETE postings of every term for its doc
            range (a document-sharded index, the classic distributed-search
-           layout), so block-max WAND runs per shard with a bounded heap
-           and only k rows per (query, shard) ever reach the merge.
+           layout), so each shard is scored on its own and only k rows
+           per (query, shard) ever reach the merge.
     -> groupBy(term, shard).applyInPandas block encoder:
        sort by doc_id, cut into BLOCK_SIZE blocks, delta-gap + varbyte
        doc_ids / tfs / doc_lens, per-block first/last/max_tf and the exact
        idf-free max score part (max over docs of tf*(k1+1)/(tf+k1*(1-b+
-       b*dl/avgdl))).  The query side multiplies the lexicon idf in with
-       the same float op order, so idf * block_max_part is an EXACT float
-       upper bound of any contained doc's term score (monotone positive
-       multiply) — the property block-max WAND's rank-identity rests on —
-       without paying a blocks x lexicon join at build time.
+       b*dl/avgdl))).  idf * block_max_part is an exact float upper bound
+       of any contained doc's term score, kept in the format for a pruning
+       scorer; the query side scores exhaustively and never reads it.
     -> write postings partitioned by DOC-RANGE SHARD (document-partitioned
        layout: shard=S dirs), rows sorted by term within each shard's files
        (row-group pruning for query terms).  The query path scores each
@@ -187,7 +185,12 @@ def tokens_from_text(pages_with_id: DataFrame) -> DataFrame:
     doc_ids that the url_ordered path derives from spark_partition_id()
     (_ordered_doc_id) in two different codegen pipelines, which breaks the
     per-partition drift Observation riding that scan.  explode_outer keeps
-    zero-token docs, so they still emit a sentinel (doc_len 0)."""
+    zero-token docs, so they still emit a sentinel (doc_len 0).
+
+    The aggregate hash-exchanges its rows, so the output is NOT
+    doc-contiguous per partition: url_ordered text builds keep the
+    exchange-free docmap and doc_id derivation but encode through the
+    general (term, shard) exchange (build_index, extend_index)."""
     ex = pages_with_id.select(
         "doc_id",
         F.expr(r"regexp_extract_all(lower(text), '[a-z0-9]+', 0)").alias("toks"),
@@ -225,7 +228,7 @@ def contiguous_splits(spark):
     {A, C} (with B elsewhere) sorts to one doc run spanning A..C, and the
     128-doc blocks cut from it overlap the partition holding B.  (Latent at
     larger file sizes, deterministic at small ones; caught by the query-side
-    cursor's disjointness check.)  Raising openCostInBytes above
+    decode's block-overlap check.)  Raising openCostInBytes above
     maxPartitionBytes makes every file chunk its own partition: large files
     still split into contiguous chunks, small files just stop being packed
     together.  Cost: at most one task per input file — irrelevant for the
@@ -391,8 +394,8 @@ def write_docmap_ordered(
     + write.  Drift between this scan and the offsets scan (conf change,
     listing-order change — they must plan identically) is caught by an
     Observation riding the write (see _pid_check_aggs); the query-side
-    cursor's block-range disjointness check remains the downstream
-    backstop.  Caller must hold contiguous_splits."""
+    decode's block-overlap check remains the downstream backstop.  Caller
+    must hold contiguous_splits."""
     from pyspark.sql import Observation
 
     obs = Observation(f"docmap-assign-{name}")
@@ -625,13 +628,16 @@ def build_index(
     url; our deterministic corpus).  Then every tokens scan split is already
     a contiguous doc_id range == a doc-range sub-shard, and the encode needs
     only a LOCAL per-partition sort — the n_postings-scale shuffle (the
-    single most expensive exchange of the build) disappears.  The query-side
-    cursor verifies block doc-ranges are disjoint and fails loudly if the
-    declaration was wrong.
+    single most expensive exchange of the build) disappears (html
+    tokenizer; text builds still encode through the exchange, see
+    tokens_from_text).  The query-side decode verifies block doc-ranges
+    are disjoint and fails loudly if the declaration was wrong.
     """
     cat = Catalog(index_root)
     done = cat.completed_partitions()
     par = spark.sparkContext.defaultParallelism
+    # only html tokens files are doc-contiguous (see tokens_from_text)
+    local_encode = url_ordered and tokenizer == "html"
 
     raw = spark.read.parquet(pages_path) if isinstance(pages_path, str) else pages_path
     pages = filtered_pages(raw, tokenizer)
@@ -705,8 +711,9 @@ def build_index(
                 payload = "html" if tokenizer == "html" else "text"
                 obs_id = Observation("tokens-docid")
                 # each extract task covers one contiguous url range (the
-                # enclosing contiguous_splits), so the tokens files it
-                # writes are doc-contiguous (the encode below depends on it)
+                # enclosing contiguous_splits), so with the html tokenizer
+                # the tokens files it writes are doc-contiguous (the local
+                # encode below depends on it)
                 pages_with_id = pages.select(
                     _ordered_doc_id(offsets).alias("doc_id"), payload
                 ).observe(obs_id, *_pid_check_aggs(offsets))
@@ -830,14 +837,14 @@ def build_index(
         # it (the blocks table recomputes it JVM-side below), so drop it
         # before the Arrow transfer into Python
         src = src.drop("bucket")
-        if not url_ordered:
+        if not local_encode:
             # co-locate each (term, shard) group; no sort — ordering is a
             # per-partition numpy detail inside the encoder
             src = src.repartition(max(enc_parts, len(pending)), "term", "shard")
-        # url_ordered: scan splits ARE disjoint doc ranges — no exchange at
-        # all.  A (term, shard) group split across splits yields one block
-        # run per split; block order is recovered from first_doc_id
-        # (ranges are disjoint), verified at query time.
+        # url_ordered html: scan splits ARE disjoint doc ranges — no
+        # exchange at all.  A (term, shard) group split across splits
+        # yields one block run per split; block order is recovered from
+        # first_doc_id (ranges are disjoint), verified at query time.
         blocks = (
             src.mapInArrow(encoder, schema=BLOCKS_SCHEMA)
             .withColumn(
@@ -856,9 +863,8 @@ def build_index(
             .repartition(max(1, min(n_shards, max(par, len(pending)))), "shard")
             .sortWithinPartitions("shard", "term", "first_doc_id")
         )
-        # block_max_part is idf-FREE; the query side multiplies the lexicon
-        # idf in (same float op order), so no blocks x lexicon join is paid
-        # here and the WAND bound stays an exact float upper bound.
+        # block_max_part is idf-FREE, so no blocks x lexicon join is paid
+        # here (the query side does not read it; see the module docstring).
         # ALL per-bucket lineage metrics ride the write job as Observation
         # metrics — computed in-flight, so the driver never reads the
         # written files at all (pending is at most n_buckets groups of 4
@@ -883,9 +889,9 @@ def build_index(
                 F.max(F.when(cond, F.col("term"))).alias(f"hi{b}"),
             ])
         blocks = blocks.observe(obs, *aggs)
-        stack = contiguous_splits(spark) if url_ordered else contextlib.nullcontext()
+        stack = contiguous_splits(spark) if local_encode else contextlib.nullcontext()
         with stack:
-            # url_ordered: this action runs the tokens scan + encode, so the
+            # local encode: this action runs the tokens scan + encode, so the
             # no-packing conf must cover it (each encode partition = one
             # contiguous tokens file chunk = one doc range).
             # 8 MiB row groups: the query path reads per-shard files with a
@@ -1025,16 +1031,12 @@ def extend_index(
         offset by n_docs) — disjoint doc ranges by construction;
       * the delta gets its own shard-id range (version*n_shards + local), so
         per-(term, shard) groups stay disjoint contiguous doc ranges and the
-        query-side cursor's global block order is preserved;
+        query-side decode's global block order is preserved;
       * global stats are recomputed EXACTLY and additively (sum_dl is an
         exact int); scores always use the CURRENT global avgdl/idf (decoded
-        tf/doc_len are stored per posting, so no score math is baked);
-      * the only baked quantity, block_max_part, depends on the avgdl at
-        encode time — per segment the registry records that avgdl, and the
-        query side multiplies old segments' bounds by
-        max(1, avgdl_now/avgdl_seg), a safe factor because the score part is
-        increasing in avgdl (plans/bm25.py) — WAND pruning stays an exact
-        upper bound across extensions in either direction of avgdl drift;
+        tf/doc_len are stored per posting, so no score math is baked — the
+        per-segment encode-time avgdl the registry records only describes
+        that segment's unread block_max_part);
       * the lexicon is merged at vocab scale (old lexicon ⊔ delta counts,
         idf recomputed with the new N) — never a corpus-scale rescan;
       * visibility is atomic: queries read the segment registry
@@ -1210,7 +1212,9 @@ def extend_index(
     if pfx + "postings" not in done:
         t0 = time.time()
         enc_parts = max(par, min(4096, n_delta // 3_000))
-        src = rows if url_ordered else rows.repartition(enc_parts, "term", "shard")
+        # only html tokens files are doc-contiguous (see tokens_from_text)
+        local_encode = url_ordered and tokenizer == "html"
+        src = rows if local_encode else rows.repartition(enc_parts, "term", "shard")
         blocks = (
             src.mapInArrow(make_arrow_encoder(avgdl_new), schema=BLOCKS_SCHEMA)
             .withColumn(
@@ -1220,7 +1224,7 @@ def extend_index(
             .repartition(max(1, min(n_shards, par)), "shard")
             .sortWithinPartitions("shard", "term", "first_doc_id")
         )
-        stack = contiguous_splits(spark) if url_ordered else contextlib.nullcontext()
+        stack = contiguous_splits(spark) if local_encode else contextlib.nullcontext()
         with stack:
             (
                 blocks.write.mode("overwrite")

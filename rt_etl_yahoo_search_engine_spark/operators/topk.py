@@ -1,22 +1,22 @@
-"""BM25 top-k: block-max WAND (optimized path) + exhaustive scorer (oracle).
+"""BM25 top-k: the vectorized batch scorer (production) + the exhaustive
+scorer (oracle).
 
-The optimized path runs per (segment, shard) inside mapInPandas over the
-metadata-scale unit list (plans/bm25.topk): the index is document-sharded
-(contiguous doc_id ranges — see index_build), so each shard holds complete
-posting lists of every term for its range and the shard-local top-k with a
-bounded min-heap is globally mergeable.  Only k rows per (query, shard)
-leave Python; the global merge is a window rank.  Posting payload bytes are
-read by the task that scores them and never enter an exchange.
+The production path runs per (segment, shard) unit inside mapInPandas
+(operators/unitscan, plans/bm25.topk) and per query in the serving
+searcher (plans/serve): the index is document-sharded (contiguous doc_id
+ranges — see index_build), so each unit holds complete posting lists of
+every term for its range and the unit-local top-k is globally mergeable.
+Each queried term is decoded once per unit (decode_term_postings_stream)
+and BatchScorer scores the whole set batch with dense per-term vectors
+over the unit's bounded doc range.  Only k rows per (set, unit) leave
+Python; the global merge is a window rank.  Posting payload bytes are read
+by the task that scores them and never enter an exchange.
 
 Rank-identity contract (north_rule): result doc_id sequence equals the
-exhaustive oracle's under the tie-break (score DESC, doc_id ASC).  Two
-properties make this hold:
-  * block_max_score is an EXACT upper bound: it was computed at build time
-    as idf * max(per-doc score parts) with the same float ops the query side
-    uses, so bound >= score holds in float arithmetic, not just real math;
-  * pruning uses strict less-than (skip only when bound < theta): a
-    candidate whose score ties the heap minimum is still fully scored, so
-    doc_id tie-breaks are decided by comparison, never by pruning.
+exhaustive oracle's under the tie-break (score DESC, doc_id ASC).  Scores
+are exact (no pruning): per doc the float adds run in ascending-term order
+with the same score-part expression on every path, and selection breaks
+ties by comparison on doc_id.
 
 The exhaustive oracle is an INDEPENDENT implementation (plain DataFrame ops
 over the staged posting rows, no shared code path beyond spec constants) —
@@ -25,153 +25,36 @@ drift between them fails the equivalence tests.
 
 from __future__ import annotations
 
-import heapq
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from .. import spec
-from .codec import (
-    decode_doc_ids,
-    decode_doc_ids_stream,
-    decode_varbyte,
-    decode_varbyte_stream,
-)
+from .codec import decode_doc_ids_stream, decode_varbyte_stream
 
-_INF = 1 << 62
-
-TOPK_PARTIAL_SCHEMA = "query_id string, doc_id long, score double"
-
-
-class _Cursor:
-    """Posting-list cursor over the compressed blocks of one term (one shard).
-
-    Blocks decode lazily: next_geq skips whole blocks via last_doc_id before
-    touching their bytes; shallow() advances only the block pointer (for
-    block-max bounds) leaving the current doc valid-for-bounds but stale,
-    which the subsequent next_geq resolves.
-    """
-
-    __slots__ = (
-        "idf", "ub", "firsts", "lasts", "bmax", "ids_vb", "tfs_vb", "dls_vb",
-        "n_blocks", "bi", "docs", "parts", "pos", "doc", "k1", "b", "avgdl",
-        "cache",
-    )
-
-    def __init__(
-        self,
-        idf: float,
-        block_pdf: pd.DataFrame,
-        avgdl: float,
-        cache: dict | None = None,
-    ):
-        # first_doc_id, not block_id, orders blocks: a (term, shard) group
-        # built from several url-ordered input splits has one block run per
-        # split (each with block_id restarting at 0) covering disjoint doc
-        # ranges
-        block_pdf = block_pdf.sort_values(["shard", "first_doc_id"])
-        self.idf = idf
-        self.firsts = block_pdf["first_doc_id"].to_numpy()
-        self.lasts = block_pdf["last_doc_id"].to_numpy()
-        if len(self.firsts) > 1 and not (self.firsts[1:] > self.lasts[:-1]).all():
-            # overlapping block ranges ⇒ the build's url_ordered declaration
-            # was wrong; results would silently drop/duplicate docs
-            raise ValueError(
-                "posting blocks overlap in doc_id; index was built with "
-                "url_ordered=True on a non-url-sorted pages table"
-            )
-        self.bmax = block_pdf["block_max_score"].to_numpy()
-        self.ids_vb = list(block_pdf["doc_ids_vb"])
-        self.tfs_vb = list(block_pdf["tfs_vb"])
-        self.dls_vb = list(block_pdf["doc_lens_vb"])
-        self.n_blocks = len(self.firsts)
-        self.ub = float(self.bmax.max()) if self.n_blocks else 0.0
-        self.avgdl = avgdl
-        self.k1, self.b = spec.K1, spec.B
-        # optional decode memo shared by ALL cursors of one query batch:
-        # key -> decoded array, so a block's bytes are decoded at most once
-        # per batch no matter how many queries touch its term (the decoded
-        # arrays are read-only; cursor state is just (bi, pos))
-        self.cache = cache
-        self.bi = 0
-        self.docs = None
-        self.pos = 0
-        self.doc = -1
-        self._load()
-        if self.docs is not None:
-            self.doc = int(self.docs[0])
-        else:
-            self.doc = _INF
-
-    def _load(self) -> None:
-        if self.bi >= self.n_blocks:
-            self.docs = None
-            return
-        ib, tb, db = self.ids_vb[self.bi], self.tfs_vb[self.bi], self.dls_vb[self.bi]
-        c = self.cache
-        if c is not None and ("i", ib) in c:
-            self.docs = c[("i", ib)]
-        else:
-            self.docs = decode_doc_ids(ib)
-            if c is not None:
-                c[("i", ib)] = self.docs
-        # idf-free score parts are query-independent: cache them across the
-        # whole batch keyed by the block's (tfs, dls) bytes
-        if c is not None and ("p", tb, db) in c:
-            self.parts = c[("p", tb, db)]
-        else:
-            tfs = decode_varbyte(tb)
-            dls = decode_varbyte(db)
-            # same op order as the build-side encoder (rank-identity)
-            self.parts = (tfs * (self.k1 + 1.0)) / (
-                tfs + self.k1 * (1.0 - self.b + self.b * dls / self.avgdl)
-            )
-            if c is not None:
-                c[("p", tb, db)] = self.parts
-        self.pos = 0
-
-    def shallow(self, target: int) -> tuple[float, int]:
-        """Advance the block pointer to the block that may contain target;
-        return (block_max_score, block_last_doc) — (0, INF) if exhausted."""
-        while self.bi < self.n_blocks and self.lasts[self.bi] < target:
-            self.bi += 1
-            self.docs = None
-        if self.bi >= self.n_blocks:
-            self.doc = _INF
-            return 0.0, _INF
-        return float(self.bmax[self.bi]), int(self.lasts[self.bi])
-
-    def next_geq(self, target: int) -> int:
-        while self.bi < self.n_blocks and self.lasts[self.bi] < target:
-            self.bi += 1
-            self.docs = None
-        if self.bi >= self.n_blocks:
-            self.doc = _INF
-            return _INF
-        if self.docs is None:
-            self._load()
-        self.pos = int(np.searchsorted(self.docs, target, side="left"))
-        if self.pos >= len(self.docs):  # defensive; lasts check should prevent
-            self.bi += 1
-            self.docs = None
-            return self.next_geq(target)
-        self.doc = int(self.docs[self.pos])
-        return self.doc
-
-    def score_current(self) -> float:
-        return self.idf * float(self.parts[self.pos])
+# the block columns the query-side decoders read (shard, where a reader
+# needs it, is the hive partition parsed from the directory name)
+POSTINGS_READ_COLS = [
+    "term",
+    "first_doc_id",
+    "last_doc_id",
+    "doc_ids_vb",
+    "tfs_vb",
+    "doc_lens_vb",
+]
 
 
 def decode_term_postings_raw(
     block_pdf: pd.DataFrame,
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """(doc_ids, tfs, doc_lens) — the raw decoded posting columns, no
-    score expression applied.  The input to ALTERNATIVE similarity
-    formulas (plans/simalt.py): any scoring function of (tf, dl) plus
-    per-term corpus statistics can ride the same pruned block reads the
-    BM25 paths use."""
+    """(doc_ids, tfs, doc_lens) of one term's blocks, doc_ids ascending.
+
+    All blocks decode as ONE concatenated varbyte stream per column
+    (codec.decode_*_stream) — one vectorized pass instead of ~8 numpy
+    dispatches per 128-doc block.  This is the query side's only block
+    decode, so its block-overlap check guards every plan: overlapping
+    block doc ranges would silently drop or duplicate docs."""
     block_pdf = block_pdf.sort_values(["shard", "first_doc_id"])
     firsts = block_pdf["first_doc_id"].to_numpy()
     lasts = block_pdf["last_doc_id"].to_numpy()
@@ -192,77 +75,13 @@ def decode_term_postings_raw(
 def decode_term_postings_stream(
     block_pdf: pd.DataFrame, avgdl: float
 ) -> tuple[np.ndarray, np.ndarray]:
-    """Term-level fast decode: all of a term's blocks decoded as ONE
-    concatenated varbyte stream (codec.decode_*_stream) — one vectorized
-    pass per column instead of ~8 numpy dispatches per 128-doc block,
-    which dominated the batch path's decode cost.  The score part is the
-    SAME elementwise expression (same dtype promotion and float op order)
-    as decode_term_postings/_Cursor._load, so results are bit-identical.
-    No block memo: the batch scan path decodes every block exactly once
-    per unit, so a cache is pure write overhead there."""
-    block_pdf = block_pdf.sort_values(["shard", "first_doc_id"])
-    firsts = block_pdf["first_doc_id"].to_numpy()
-    lasts = block_pdf["last_doc_id"].to_numpy()
-    if len(firsts) > 1 and not (firsts[1:] > lasts[:-1]).all():
-        raise ValueError(
-            "posting blocks overlap in doc_id; index was built with "
-            "url_ordered=True on a non-url-sorted pages table"
-        )
-    ids = decode_doc_ids_stream(block_pdf["doc_ids_vb"])
-    if not len(ids):
-        return np.empty(0, dtype=np.int64), np.empty(0, dtype=np.float64)
-    tfs = decode_varbyte_stream(block_pdf["tfs_vb"])
-    dls = decode_varbyte_stream(block_pdf["doc_lens_vb"])
+    """(doc_ids, idf-free BM25 score parts) of one term's blocks: the raw
+    decode plus the score-part expression.  Every scoring path (Spark
+    batch, serve, stats) decodes through here, so per-term score parts
+    are bit-identical across them."""
+    ids, tfs, dls = decode_term_postings_raw(block_pdf)
     k1, b = spec.K1, spec.B
-    parts = (tfs * (k1 + 1.0)) / (tfs + k1 * (1.0 - b + b * dls / avgdl))
-    return ids, parts
-
-
-def decode_term_postings(
-    block_pdf: pd.DataFrame, avgdl: float, cache: dict | None = None
-) -> tuple[np.ndarray, np.ndarray]:
-    """Fully decode one term's blocks (one shard unit) into parallel
-    (doc_ids, score_parts) numpy arrays, doc_ids ascending.
-
-    Shares the block-decode memo keys with _Cursor ("i"/"p"), so a mixed
-    WAND+TAAT batch still decodes each block's bytes at most once.  The
-    score part uses the SAME float op order as _Cursor._load (rank
-    identity with the oracle and the WAND path)."""
-    block_pdf = block_pdf.sort_values(["shard", "first_doc_id"])
-    firsts = block_pdf["first_doc_id"].to_numpy()
-    lasts = block_pdf["last_doc_id"].to_numpy()
-    if len(firsts) > 1 and not (firsts[1:] > lasts[:-1]).all():
-        raise ValueError(
-            "posting blocks overlap in doc_id; index was built with "
-            "url_ordered=True on a non-url-sorted pages table"
-        )
-    ids_l: list[np.ndarray] = []
-    parts_l: list[np.ndarray] = []
-    k1, b = spec.K1, spec.B
-    for ib, tb, db in zip(
-        block_pdf["doc_ids_vb"], block_pdf["tfs_vb"], block_pdf["doc_lens_vb"]
-    ):
-        if cache is not None and ("i", ib) in cache:
-            ids = cache[("i", ib)]
-        else:
-            ids = decode_doc_ids(ib)
-            if cache is not None:
-                cache[("i", ib)] = ids
-        if cache is not None and ("p", tb, db) in cache:
-            parts = cache[("p", tb, db)]
-        else:
-            tfs = decode_varbyte(tb)
-            dls = decode_varbyte(db)
-            parts = (tfs * (k1 + 1.0)) / (
-                tfs + k1 * (1.0 - b + b * dls / avgdl)
-            )
-            if cache is not None:
-                cache[("p", tb, db)] = parts
-        ids_l.append(ids)
-        parts_l.append(parts)
-    if not ids_l:
-        return np.empty(0, dtype=np.int64), np.empty(0, dtype=np.float64)
-    return np.concatenate(ids_l), np.concatenate(parts_l)
+    return ids, (tfs * (k1 + 1.0)) / (tfs + k1 * (1.0 - b + b * dls / avgdl))
 
 
 def _taat_select(u: np.ndarray, acc: np.ndarray, k: int) -> list[tuple[int, float]]:
@@ -291,13 +110,8 @@ def taat_topk(
     PRESENT in this shard, in sorted-term order.  Returns [(doc_id, score)]
     sorted by (score DESC, doc_id ASC), exact scores (no pruning — the
     per-shard doc range is bounded by the doc-range sharding, so the full
-    scan is O(sum df_shard) in vectorized numpy).
-
-    This is the scan-side BATCH scorer: with k per shard required for
-    global rank identity, WAND's threshold rarely prunes inside one shard,
-    and its per-doc Python-interpreter cost dominates (measured ~60 ms per
-    (query, shard) vs <1 ms here).  Block-max WAND (_bmw) remains the
-    single-query/latency path."""
+    scan is O(sum df_shard) in vectorized numpy).  DenseScorer's fallback
+    for degenerate-sparse doc ranges."""
     if not postings:
         return []
     if mode == spec.MODE_CONJUNCTIVE:
@@ -866,119 +680,6 @@ class BatchScorer:
                 out_doc.append(cc + self._base)
                 out_sc.append(vals)
         return _cat()
-
-
-def _push(heap: list, k: int, score: float, doc_id: int) -> None:
-    # min-heap keyed (score, -doc_id): the worst entry is the smallest score,
-    # ties broken so that the LARGER doc_id is worse (tie-break doc_id ASC).
-    item = (score, -doc_id)
-    if len(heap) < k:
-        heapq.heappush(heap, item)
-    elif item > heap[0]:
-        heapq.heapreplace(heap, item)
-
-
-def wand_topk(
-    cursors: list[_Cursor], k: int, mode: str, n_terms: int
-) -> list[tuple[int, float]]:
-    """Shard-local BM25 top-k. Returns [(doc_id, score)] (unsorted)."""
-    if mode == spec.MODE_CONJUNCTIVE:
-        return _conjunctive(cursors, k, n_terms)
-    return _bmw(cursors, k)
-
-
-def _bmw(cursors: list[_Cursor], k: int) -> list[tuple[int, float]]:
-    heap: list[tuple[float, int]] = []
-    cursors = [c for c in cursors if c.doc < _INF]
-    while cursors:
-        cursors.sort(key=lambda c: c.doc)
-        while cursors and cursors[-1].doc >= _INF:
-            cursors.pop()
-        if not cursors:
-            break
-        full = len(heap) >= k
-        theta = heap[0][0] if full else -np.inf
-        # pivot: first prefix whose term-UB sum could still beat/tie theta
-        acc = 0.0
-        pivot = -1
-        for i, c in enumerate(cursors):
-            acc += c.ub
-            if not full or acc >= theta:
-                pivot = i
-                break
-        if pivot < 0:
-            break  # total remaining upper bound below theta: done
-        d = cursors[pivot].doc
-        if d >= _INF:
-            break
-        # extend the prefix over every cursor already sitting at d, so the
-        # block-max bound below covers ALL terms d could contain
-        while pivot + 1 < len(cursors) and cursors[pivot + 1].doc == d:
-            pivot += 1
-        # block-max refinement over the pivot prefix
-        bacc = 0.0
-        boundary = _INF
-        for c in cursors[: pivot + 1]:
-            bm, blast = c.shallow(d)
-            bacc += bm
-            if blast < boundary:
-                boundary = blast
-        if full and bacc < theta:
-            # no doc in the prefix's current blocks can beat theta: skip past
-            # the nearest block boundary, but never past the first doc of any
-            # non-prefix cursor (docs there may draw on additional terms)
-            target = boundary + 1
-            if pivot + 1 < len(cursors):
-                target = min(target, cursors[pivot + 1].doc)
-            target = max(target, d + 1)
-            for c in cursors[: pivot + 1]:
-                if c.doc < target:
-                    c.next_geq(target)
-            cursors = [c for c in cursors if c.doc < _INF]
-            continue
-        if cursors[0].doc == d:
-            # all cursors in the prefix sit at d: full score
-            score = 0.0
-            for c in cursors:
-                if c.doc == d:
-                    score += c.score_current()
-            _push(heap, k, score, d)
-            for c in cursors:
-                if c.doc == d:
-                    c.next_geq(d + 1)
-            cursors = [c for c in cursors if c.doc < _INF]
-        else:
-            # advance the lagging cursors up to the pivot doc
-            for c in cursors[:pivot]:
-                if c.doc < d:
-                    c.next_geq(d)
-            cursors = [c for c in cursors if c.doc < _INF]
-    return [(-nd, s) for s, nd in heap]
-
-
-def _conjunctive(cursors: list[_Cursor], k: int, n_terms: int) -> list[tuple[int, float]]:
-    """Posting-list intersection with block skipping (doc-at-a-time)."""
-    if len(cursors) < n_terms:  # some query term absent from this shard
-        return []
-    heap: list[tuple[float, int]] = []
-    d = max(c.doc for c in cursors)
-    while d < _INF:
-        aligned = True
-        for c in cursors:
-            if c.doc < d:
-                c.next_geq(d)
-            if c.doc != d:
-                aligned = False
-        nd = max(c.doc for c in cursors)
-        if aligned and nd == d:
-            score = sum(c.score_current() for c in cursors)
-            _push(heap, k, score, d)
-            nd = d + 1
-            for c in cursors:
-                c.next_geq(nd)
-            nd = max(c.doc for c in cursors)
-        d = nd
-    return [(-nd, s) for s, nd in heap]
 
 
 # --- exhaustive oracle (independent implementation, plain DataFrame ops) -------

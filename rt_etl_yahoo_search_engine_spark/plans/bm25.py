@@ -4,10 +4,10 @@ Two paths, both returning (query_id, rank, doc_id, score [, url]):
 
   * optimized — driver-side lexicon lookup (pyarrow, term-isin row-group
     pruned: query terms are a handful of literals against a vocab-scale
-    term-sorted table), then SCAN-SIDE scoring: one task per (segment,
-    doc-range shard) opens its own shard directory with pyarrow, reads only
-    the query terms' row groups, decodes each queried term's postings ONCE,
-    and scores each DISTINCT term set of the broadcast query batch with
+    term-sorted table), then SCAN-SIDE scoring (operators/unitscan): one
+    task per (segment, doc-range shard) opens its own shard directory with
+    pyarrow, reads only the query terms' row groups, decodes each queried
+    term's postings ONCE, and scores each DISTINCT term set of the batch with
     the vectorized batch scorer (operators.topk.BatchScorer: one dense
     score vector per term hoisted over the shard's bounded doc range,
     per-set elementwise add + top-k select; budget-gated scatter/sparse
@@ -36,42 +36,20 @@ every shard, so the hottest task is bounded by df/n_shards.
 
 from __future__ import annotations
 
-import math
-import os
-
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .. import spec
-from ..operators.deletes import deleted_dir_paths, read_deleted_ids
+from ..operators.deletes import deleted_dir_paths
 from ..operators.topk import (
     BatchScorer,
     decode_term_postings_stream,
     exhaustive_topk,
 )
+from ..operators.unitscan import scan_units, shard_units
 from ..sources.catalog import Catalog
-
-_POSTINGS_READ_COLS = [
-    "term",
-    "first_doc_id",
-    "last_doc_id",
-    "block_max_part",
-    "doc_ids_vb",
-    "tfs_vb",
-    "doc_lens_vb",
-]
-
-
-def _bound_factor(avgdl: float, avgdl_seg: float) -> float:
-    """Upper-bound correction for blocks encoded against an older avgdl.
-
-    The BM25 score part is increasing in avgdl, so avgdl/avgdl_seg >= the
-    pointwise ratio; padded one ulp so that the float rounding of the
-    extra multiply in block_max_score can never fall below a tied true
-    score (the factor must be a TRUE float upper bound for strict-<
-    pruning to preserve rank identity)."""
-    f = max(1.0, float(avgdl) / float(avgdl_seg))
-    return f if f == 1.0 else math.nextafter(f, math.inf)
 
 
 def build_qmeta(
@@ -206,20 +184,6 @@ def expand_fuzzy(
     return sorted(t for t, _ in pairs)
 
 
-def _shard_units(cat: Catalog, reg: dict, avgdl: float) -> list[tuple[str, float]]:
-    """(shard directory, bound factor) per (segment, shard) — metadata-scale
-    (one entry per doc-range shard; the dir list is the driver's only
-    filesystem touch on the postings)."""
-    units = []
-    for seg in reg["segments"]:
-        seg_path = cat.path(seg["dir"])
-        factor = _bound_factor(avgdl, float(seg["avgdl"]))
-        for d in sorted(os.listdir(seg_path)):
-            if d.startswith("shard="):
-                units.append((os.path.join(seg_path, d), factor))
-    return units
-
-
 def topk(
     spark: SparkSession,
     index_root: str,
@@ -317,7 +281,7 @@ def topk(
         excl = tuple(t for t in qexcl.get(qid, ()) if t in idf)
         sid = setplan.setdefault((present, excl), len(setplan))
         qmap.append((sid, qid))
-    units = _shard_units(cat, reg, avgdl)
+    units = shard_units(cat, reg)
     if not setplan or not units:
         return empty
 
@@ -329,101 +293,48 @@ def topk(
     corpus_terms = sorted(
         {t for terms, excl in setplan for t in (*terms, *excl)}
     )
-    # tombstoned docs (operators/deletes.py) are masked UNIT-LOCALLY: each
-    # task reads only its own doc range of the doc-id-sorted sidecar
-    del_paths = deleted_dir_paths(cat, reg)
-    b_plan = spark.sparkContext.broadcast(
-        (set_terms, set_excls, idf, corpus_terms, mode, k, avgdl, del_paths)
-    )
 
-    def score_units(pdfs):
-        import pandas as pd
-        import pyarrow.dataset as pds
+    def score_unit(tdata, deleted):
+        # every union term is decoded ONCE per unit into (doc_ids,
+        # score_parts); the whole distinct-set batch is then scored by
+        # chunked matrix ops (operators.topk.BatchScorer.topk_sets: union-
+        # term score matrix built once per unit, chunk-of-sets f32 gather-
+        # add with tile-max-bounded candidate selection, exact f64 scores
+        # for the ~k candidates; budget-gated sparse fallback,
+        # bit-identical).  Scores use the CURRENT corpus avgdl, so
+        # extended segments need no correction.
+        masks = None
+        if any(set_excls) or deleted is not None:
+            # unit-local exclusion doc sets: each unit holds the complete
+            # posting lists for its own doc range, so the minus-terms' doc
+            # ids here ARE the excluded docs here; tombstoned docs are
+            # masked the same way (operators/deletes.py)
+            masks = []
+            for excl in set_excls:
+                ids = [
+                    tdata[t][0] for t in excl if t in tdata and len(tdata[t][0])
+                ]
+                if deleted is not None:
+                    ids.append(deleted)
+                masks.append(np.unique(np.concatenate(ids)) if ids else None)
+        si, d, s = BatchScorer(tdata, idf).topk_sets(
+            set_terms, k, mode, masks=masks
+        )
+        if len(si):
+            yield pd.DataFrame({"set_idx": si, "doc_id": d, "score": s})
 
-        (sets_l, excls_l, idf_l, terms_l, mode_l, k_l, avgdl_l,
-         del_paths_l) = b_plan.value
-        for updf in pdfs:
-            for path, factor in zip(updf["path"], updf["factor"]):
-                dset = pds.dataset(path)
-                tbl = dset.to_table(
-                    columns=_POSTINGS_READ_COLS,
-                    filter=pds.field("term").isin(terms_l),
-                )
-                if tbl.num_rows == 0:
-                    continue
-                bl = tbl.to_pandas()
-                bl["shard"] = 0  # constant within a unit (block sort key)
-                # every union term fully decoded ONCE per unit into
-                # (doc_ids, score_parts) arrays; the whole distinct-set
-                # batch is then scored by chunked matrix ops
-                # (operators.topk.BatchScorer.topk_sets: union-term score
-                # matrix built once per unit, chunk-of-sets f32 gather-add
-                # with tile-max-bounded candidate selection, exact f64
-                # scores for the ~k candidates; budget-gated sparse
-                # fallback, bit-identical).  The avgdl drift factor is a
-                # WAND-bound concept only — TAAT computes exact scores
-                # from tf/dl with the CURRENT corpus avgdl, so extended-
-                # segment drift needs no correction here.
-                tdata = {
-                    t: decode_term_postings_stream(g, avgdl_l)
-                    for t, g in bl.groupby("term", sort=True)
-                }
-                scorer = BatchScorer(tdata, idf_l)
-                deleted = None
-                if del_paths_l:
-                    # this unit's doc range is bounded by the blocks it
-                    # just read (a doc can only score here if some queried
-                    # term's postings contain it here)
-                    deleted = read_deleted_ids(
-                        del_paths_l,
-                        int(bl["first_doc_id"].min()),
-                        int(bl["last_doc_id"].max()),
-                    )
-                    if not len(deleted):
-                        deleted = None
-                masks = None
-                if any(excls_l) or deleted is not None:
-                    import numpy as np
-
-                    # unit-local exclusion doc sets: each unit holds the
-                    # complete posting lists for its own doc range, so the
-                    # minus-terms' doc ids here ARE the excluded docs here
-                    masks = []
-                    for excl in excls_l:
-                        ids = [
-                            tdata[t][0]
-                            for t in excl
-                            if t in tdata and len(tdata[t][0])
-                        ]
-                        if deleted is not None:
-                            ids.append(deleted)
-                        masks.append(
-                            np.unique(np.concatenate(ids)) if ids else None
-                        )
-                si, d, s = scorer.topk_sets(sets_l, k_l, mode_l, masks=masks)
-                if not len(si):
-                    continue
-                yield pd.DataFrame({"set_idx": si, "doc_id": d, "score": s})
-
-    # one unit per task: a unit is the natural work quantum (decode once,
-    # score the whole batch); packing several per task makes the last
-    # wave a straggler tail (measured: 2 units/task left 25% of the wall
-    # on 1-2 busy cores at 8 slots)
-    units_df = spark.createDataFrame(units, "path string, factor double").repartition(
-        len(units)
-    )
-    partials = units_df.mapInPandas(
-        score_units, schema="set_idx int, doc_id long, score double"
+    partials = scan_units(
+        spark, units, corpus_terms, deleted_dir_paths(cat, reg),
+        lambda g: decode_term_postings_stream(g, avgdl), score_unit,
+        "set_idx int, doc_id long, score double",
     )
     if _partials_only:  # diagnostic: scoring stage without the global merge
         return partials
     w = Window.partitionBy("set_idx").orderBy(F.desc("score"), F.asc("doc_id"))
     # pandas -> Arrow path: a list-of-tuples createDataFrame walks py4j row
     # by row (~0.7 s at 30k queries of driver-serial prep)
-    import pandas as _pd
-
     map_df = spark.createDataFrame(
-        _pd.DataFrame(qmap, columns=["set_idx", "query_id"]).astype(
+        pd.DataFrame(qmap, columns=["set_idx", "query_id"]).astype(
             {"set_idx": "int32"}
         ),
         schema="set_idx int, query_id string",

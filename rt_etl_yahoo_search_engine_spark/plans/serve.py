@@ -29,10 +29,8 @@ searcher-node role, runnable against any index the build wrote:
     fallback for rare/over-budget terms, all bit-identical), on top of a
     per-term decoded-postings hot cache (head terms decode once per
     searcher lifetime), so results are rank-identical by construction —
-    asserted by tests/test_serve.py.  Block-max WAND (operators.topk._bmw)
-    remains available for corpora where block-max pruning beats the
-    vectorized scan; measured on the synthetic corpus the per-doc Python
-    cursor cost dominates anything pruning saves.
+    asserted by tests/test_serve.py.  Scores are exact (no pruning;
+    SCALE.md records the measurement behind that choice).
 
 One process here holds every shard, so the S-way merge is local; the float
 sum order per doc (ascending term order) matches the distributed path's
@@ -54,24 +52,13 @@ import pandas as pd
 
 from .. import spec
 from ..operators.topk import (
+    POSTINGS_READ_COLS,
     BatchScorer,
     decode_term_postings_raw,
     decode_term_postings_stream,
 )
 from ..sources.catalog import Catalog
-from .bm25 import _bound_factor
-
-# columns physically present in the postings data files (shard is the
-# hive partition, parsed from the directory name)
-_POSTINGS_FILE_COLS = [
-    "term",
-    "first_doc_id",
-    "last_doc_id",
-    "block_max_part",
-    "doc_ids_vb",
-    "tfs_vb",
-    "doc_lens_vb",
-]
+from .simalt import term_weights
 
 
 def _stat_str(v) -> str:
@@ -88,12 +75,11 @@ class _SegmentReader:
     cached handles — no per-call dataset/scanner construction, which costs
     tens of ms across many fragments."""
 
-    def __init__(self, seg_dir: str, factor: float):
+    def __init__(self, seg_dir: str):
         from concurrent.futures import ThreadPoolExecutor
 
         import pyarrow.parquet as pq
 
-        self.factor = factor
         self.files: list[tuple[object, int, list[tuple[str, str]]]] = []
         for d in sorted(os.listdir(seg_dir)):
             if not d.startswith("shard="):
@@ -126,9 +112,7 @@ class _SegmentReader:
 
         def _load(ent):
             pf, shard, _ = ent
-            pdf = pf.read(columns=_POSTINGS_FILE_COLS).to_pandas()
-            if self.factor != 1.0:
-                pdf["block_max_part"] = pdf["block_max_part"] * self.factor
+            pdf = pf.read(columns=POSTINGS_READ_COLS).to_pandas()
             pdf["shard"] = shard
             return pdf, pdf["term"].to_numpy()  # files are term-sorted
 
@@ -159,13 +143,11 @@ class _SegmentReader:
         ]
         if not idxs:
             return None
-        tbl = pf.read_row_groups(idxs, columns=_POSTINGS_FILE_COLS)
+        tbl = pf.read_row_groups(idxs, columns=POSTINGS_READ_COLS)
         tbl = tbl.filter(pc.field("term").isin(terms_sorted))
         if not tbl.num_rows:
             return None
         pdf = tbl.to_pandas()
-        if self.factor != 1.0:
-            pdf["block_max_part"] = pdf["block_max_part"] * self.factor
         pdf["shard"] = shard
         return pdf
 
@@ -206,15 +188,9 @@ class LocalSearcher:
         self._docmap_ds = [
             ds.dataset(cat.path(d)) for d in reg.get("docmap_dirs", ["docmap"])
         ]
-        # one pruned reader per posting segment; the bound-correction factor
-        # for blocks encoded against an older global avgdl (ulp-padded true
-        # upper bound — see plans/bm25._bound_factor) is applied inside
+        # one pruned reader per posting segment
         self._segments = [
-            _SegmentReader(
-                cat.path(seg["dir"]),
-                _bound_factor(self.avgdl, float(seg["avgdl"])),
-            )
-            for seg in reg["segments"]
+            _SegmentReader(cat.path(seg["dir"])) for seg in reg["segments"]
         ]
         # tombstoned docs (operators/deletes.py): the searcher's live-docs
         # set, loaded once per process — the RAM analog of Lucene's
@@ -233,9 +209,8 @@ class LocalSearcher:
         self._term_cache: dict[str, float | None] = {}
         # hot-postings cache: term -> fully-decoded (doc_ids, score_parts)
         # arrays across all segments — what a production searcher keeps in
-        # memory for head terms.  Bounded by entry count; evicted FIFO.  The
-        # block-decode memo is shared across all queries for the searcher's
-        # lifetime (decoded arrays are immutable).
+        # memory for head terms.  Bounded by entry count; evicted FIFO
+        # (decoded arrays are immutable).
         self._postings_cache: dict[str, tuple] = {}
         self._postings_cache_max = 50_000
         # long-lived batch scorer (operators.topk.BatchScorer): head terms
@@ -288,42 +263,38 @@ class LocalSearcher:
 
     # -- postings ---------------------------------------------------------
 
+    def _decode_missing(self, cache: dict, missing: list[str], decode, empty):
+        """Decode every segment's blocks of the `missing` terms into
+        `cache` (term -> decode(term's block frame)); terms with no blocks
+        get `empty`.  Ordering by (shard, first_doc_id) inside the decoder
+        is global doc_id order: shards are contiguous doc ranges and
+        extension segments get strictly higher shard ids over strictly
+        higher doc ranges."""
+        parts = [p for seg in self._segments for p in seg.blocks_for(missing)]
+        if parts:
+            pdf = parts[0] if len(parts) == 1 else pd.concat(parts, ignore_index=True)
+            for term, grp in pdf.groupby("term", sort=False):
+                cache[term] = decode(grp)
+        for t in missing:
+            if t not in cache:  # only reachable mid-extension
+                cache[t] = empty
+
     def _decoded_postings(self, term_meta: dict[str, float]) -> dict[str, tuple]:
         """term -> decoded (doc_ids, score_parts), via the hot-postings
-        cache.  Ordering by (shard, first_doc_id) is global doc_id order:
-        shards are contiguous doc ranges and extension segments get strictly
-        higher shard ids over strictly higher doc ranges."""
+        cache (empty terms left out)."""
         missing = sorted(t for t in term_meta if t not in self._postings_cache)
         if missing:
-            parts = []
-            for seg in self._segments:
-                parts.extend(seg.blocks_for(missing))
-            pdf = (
-                parts[0]
-                if len(parts) == 1
-                else pd.concat(parts, ignore_index=True)
-                if parts
-                else pd.DataFrame(columns=_POSTINGS_FILE_COLS + ["shard"])
-            )
             while (
                 len(self._postings_cache) + len(missing) > self._postings_cache_max
                 and self._postings_cache
             ):
                 self._postings_cache.pop(next(iter(self._postings_cache)))
-            found = set()
-            for term, grp in pdf.groupby("term", sort=False):
-                found.add(term)
-                # term-level stream decode: the term cache supersedes the
-                # block memo here (each block decodes once per cached term)
-                self._postings_cache[term] = decode_term_postings_stream(
-                    grp, self.avgdl
-                )
-            for t in missing:
-                if t not in found:  # only reachable mid-extension
-                    self._postings_cache[t] = (
-                        np.empty(0, dtype=np.int64),
-                        np.empty(0, dtype=np.float64),
-                    )
+            self._decode_missing(
+                self._postings_cache,
+                missing,
+                lambda g: decode_term_postings_stream(g, self.avgdl),
+                (np.empty(0, dtype=np.int64), np.empty(0, dtype=np.float64)),
+            )
         return {
             t: d for t in term_meta if len((d := self._postings_cache[t])[0])
         }
@@ -635,24 +606,10 @@ class LocalSearcher:
         """term -> raw (doc_ids, tfs, doc_lens), via its own cache."""
         missing = sorted(t for t in terms_sorted if t not in self._raw_cache)
         if missing:
-            parts = []
-            for seg in self._segments:
-                parts.extend(seg.blocks_for(missing))
-            pdf = (
-                parts[0]
-                if len(parts) == 1
-                else pd.concat(parts, ignore_index=True)
-                if parts
-                else pd.DataFrame(columns=_POSTINGS_FILE_COLS + ["shard"])
-            )
-            found = set()
-            for term, grp in pdf.groupby("term", sort=False):
-                found.add(term)
-                self._raw_cache[term] = decode_term_postings_raw(grp)
             z = np.empty(0, dtype=np.int64)
-            for t in missing:
-                if t not in found:  # only reachable mid-extension
-                    self._raw_cache[t] = (z, z, z)
+            self._decode_missing(
+                self._raw_cache, missing, decode_term_postings_raw, (z, z, z)
+            )
         return {t: self._raw_cache[t] for t in terms_sorted}
 
     def search_alt(
@@ -687,18 +644,10 @@ class LocalSearcher:
             ids, tfs, dls = raw[t]
             if not len(ids):
                 continue
-            tfs = tfs.astype(np.float64)
-            dls = dls.astype(np.float64)
-            df_t, cf_t = stats[t]
-            if similarity == "dirichlet":
-                w = np.log(1.0 + tfs / (mu * (cf_t / total)))
-                w += np.log(mu / (dls + mu))
-                np.maximum(w, 0.0, out=w)
-            else:  # tfidf
-                idf_c = 1.0 + np.log(n_docs / (df_t + 1.0))
-                w = np.sqrt(tfs) * (idf_c * idf_c) / np.sqrt(dls)
             chunks_ids.append(ids)
-            chunks_w.append(w)
+            chunks_w.append(
+                term_weights(similarity, tfs, dls, *stats[t], n_docs, total, mu)
+            )
         if not chunks_ids:
             return []
         ids = np.concatenate(chunks_ids)
@@ -722,7 +671,7 @@ class LocalSearcher:
         update, compaction).  Steady-state cost is ONE registry read (the
         atomic-rename commit file, metadata-scale at any corpus size);
         on a version change the searcher fully re-initializes — new
-        segment readers and bound factors, fresh live-docs set, caches
+        segment readers, fresh live-docs set, caches
         dropped (their keys may be stale) — against the new registry's
         consistent snapshot.  Returns True when it re-opened.  Not safe
         against concurrent in-flight reads of the SAME searcher object;

@@ -5,7 +5,7 @@ per field (the `similarity` setting: `LMDirichlet`, `classic` TF-IDF —
 LMDirichletSimilarity / ClassicSimilarity).  The posting lists don't
 change — only the per-term weight formula does — so these run as
 alternative weight kernels over the IDENTICAL pruned posting reads the
-BM25 paths use (operators/topk.decode_term_postings_raw), with per-term
+BM25 paths use (operators/unitscan + topk.decode_term_postings_raw), with per-term
 corpus statistics (df, cf) from the lexicon sidecar and (N, total
 tokens) from the registry.
 
@@ -36,16 +36,16 @@ unit-local, so per-unit top-k is globally correct after the merge.
 from __future__ import annotations
 
 import numpy as np
-
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from .. import spec
 from ..operators.topk import decode_term_postings_raw
+from ..operators.unitscan import scan_units
 from ..sources.catalog import Catalog
-from .bm25 import _POSTINGS_READ_COLS
-from .stats import _plan, _unit_deleted, _unit_scan
+from .stats import _plan
 
 
 def lexicon_df_cf(cat: Catalog, reg: dict, terms: list[str]) -> dict:
@@ -65,6 +65,21 @@ def lexicon_df_cf(cat: Catalog, reg: dict, terms: list[str]) -> dict:
             tbl.column("cf").to_pylist(),
         )
     }
+
+
+def term_weights(similarity, tfs, dls, df_t, cf_t, n_docs, total, mu):
+    """Per-posting weight of one term under `similarity` (module
+    docstring) — the one kernel both this plan and the serving searcher
+    (plans/serve.search_alt) run, so their scores are float-identical."""
+    tfs = tfs.astype(np.float64)
+    dls = dls.astype(np.float64)
+    if similarity == "dirichlet":
+        w = np.log(1.0 + tfs / (mu * (cf_t / total)))
+        w += np.log(mu / (dls + mu))
+        np.maximum(w, 0.0, out=w)
+        return w
+    idf_c = 1.0 + np.log(n_docs / (df_t + 1.0))  # tfidf
+    return np.sqrt(tfs) * (idf_c * idf_c) / np.sqrt(dls)
 
 
 def alt_topk(
@@ -88,66 +103,38 @@ def alt_topk(
     reg = cat.read_registry()
     dfcf = lexicon_df_cf(cat, reg, corpus_terms)
     n_docs, total = int(reg["n_docs"]), int(reg["sum_dl"])
-    b = spark.sparkContext.broadcast(
-        (set_terms, corpus_terms, del_paths, similarity, float(mu), dfcf,
-         n_docs, total, int(k))
-    )
+    mu, k = float(mu), int(k)
 
-    def score_units(pdfs):
-        import pandas as pd
-        import pyarrow.dataset as pds
+    def score_unit(raw, deleted):
+        tdata = {
+            t: (ids, term_weights(similarity, tfs, dls, *dfcf[t], n_docs,
+                                  total, mu))
+            for t, (ids, tfs, dls) in raw.items()
+        }
+        for si, terms in enumerate(set_terms):
+            present = [t for t in terms if t in tdata]
+            if not present:
+                continue
+            ids = np.concatenate([tdata[t][0] for t in present])
+            sc = np.concatenate([tdata[t][1] for t in present])
+            uniq, inv = np.unique(ids, return_inverse=True)
+            sums = np.zeros(len(uniq))
+            np.add.at(sums, inv, sc)
+            if deleted is not None and len(uniq):
+                keep = ~np.isin(uniq, deleted)
+                uniq, sums = uniq[keep], sums[keep]
+            if not len(uniq):
+                continue
+            # per-unit top-k by (score desc, doc_id asc): globally
+            # correct because doc-range shards are doc-complete
+            order = np.lexsort((uniq, -sums))[:k]
+            yield pd.DataFrame(
+                {"set_idx": si, "doc_id": uniq[order], "score": sums[order]}
+            )
 
-        (sets_l, terms_l, del_paths_l, sim_l, mu_l, dfcf_l, n_l, tot_l,
-         k_l) = b.value
-        for updf in pdfs:
-            for path in updf["path"]:
-                tbl = pds.dataset(path).to_table(
-                    columns=_POSTINGS_READ_COLS,
-                    filter=pds.field("term").isin(terms_l),
-                )
-                if tbl.num_rows == 0:
-                    continue
-                bl = tbl.to_pandas()
-                bl["shard"] = 0
-                tdata = {}
-                for t, g in bl.groupby("term", sort=True):
-                    ids, tfs, dls = decode_term_postings_raw(g)
-                    tfs = tfs.astype(np.float64)
-                    dls = dls.astype(np.float64)
-                    df_t, cf_t = dfcf_l[t]
-                    if sim_l == "dirichlet":
-                        w = np.log(1.0 + tfs / (mu_l * (cf_t / tot_l)))
-                        w += np.log(mu_l / (dls + mu_l))
-                        np.maximum(w, 0.0, out=w)
-                    else:  # tfidf
-                        idf_c = 1.0 + np.log(n_l / (df_t + 1.0))
-                        w = np.sqrt(tfs) * (idf_c * idf_c) / np.sqrt(dls)
-                    tdata[t] = (ids, w)
-                deleted = _unit_deleted(del_paths_l, bl)
-                for si, terms in enumerate(sets_l):
-                    present = [t for t in terms if t in tdata]
-                    if not present:
-                        continue
-                    ids = np.concatenate([tdata[t][0] for t in present])
-                    sc = np.concatenate([tdata[t][1] for t in present])
-                    uniq, inv = np.unique(ids, return_inverse=True)
-                    sums = np.zeros(len(uniq))
-                    np.add.at(sums, inv, sc)
-                    if deleted is not None and len(uniq):
-                        keep = ~np.isin(uniq, deleted)
-                        uniq, sums = uniq[keep], sums[keep]
-                    if not len(uniq):
-                        continue
-                    # per-unit top-k by (score desc, doc_id asc): globally
-                    # correct because doc-range shards are doc-complete
-                    order = np.lexsort((uniq, -sums))[:k_l]
-                    yield pd.DataFrame(
-                        {"set_idx": si, "doc_id": uniq[order],
-                         "score": sums[order]}
-                    )
-
-    rel = _unit_scan(
-        spark, units, (score_units, "set_idx int, doc_id long, score double")
+    rel = scan_units(
+        spark, units, corpus_terms, del_paths, decode_term_postings_raw,
+        score_unit, "set_idx int, doc_id long, score double",
     )
     w = Window.partitionBy("query_id").orderBy(
         F.desc("score"), F.asc("doc_id")
@@ -155,6 +142,6 @@ def alt_topk(
     return (
         rel.join(F.broadcast(map_df), "set_idx")
         .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= int(k))
+        .filter(F.col("rank") <= k)
         .select("query_id", F.col("rank").cast("int"), "doc_id", "score")
     )

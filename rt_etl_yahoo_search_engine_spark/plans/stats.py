@@ -29,22 +29,23 @@ absence, not a zero row).
 
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import spec
-from ..operators.deletes import deleted_dir_paths, read_deleted_ids
-from ..operators.topk import decode_term_postings_stream
+from ..operators.deletes import deleted_dir_paths
+from ..operators.topk import decode_term_postings_raw, decode_term_postings_stream
+from ..operators.unitscan import scan_units, shard_units
 from ..sources.catalog import Catalog
-from .bm25 import _POSTINGS_READ_COLS, _shard_units, lexicon_idf
+from .bm25 import lexicon_idf
 
 
 def _plan(spark, index_root, queries, mode):
     """Shared prologue (bm25.topk's distinct-set planning, sans exclusion):
-    returns (set_terms, qmap_df, units, corpus_terms) or None if nothing
-    can match."""
-    import pandas as pd
-
+    returns (set_terms, qmap_df, units, corpus_terms, del_paths, idf,
+    avgdl) or None if nothing can match."""
     cat = Catalog(index_root)
     reg = cat.read_registry()
     qtoks = {qid: sorted(set(spec.tokenize(t))) for qid, t in queries.items()}
@@ -62,7 +63,7 @@ def _plan(spark, index_root, queries, mode):
             continue
         sid = setplan.setdefault(present, len(setplan))
         qmap.append((sid, qid))
-    units = _shard_units(cat, reg, float(reg["avgdl"]))
+    units = shard_units(cat, reg)
     if not setplan or not units:
         return None
     set_terms = [list(t) for t in setplan]
@@ -77,29 +78,9 @@ def _plan(spark, index_root, queries, mode):
             deleted_dir_paths(cat, reg), idf, float(reg["avgdl"]))
 
 
-def _unit_scan(spark, units, body):
-    units_df = spark.createDataFrame(
-        units, "path string, factor double"
-    ).repartition(len(units))
-    return units_df.mapInPandas(*body)
-
-
-def _unit_deleted(del_paths, bl):
-    """This unit's tombstoned doc ids (operators/deletes.py), bounded by
-    the doc range of the blocks it just read — None when there are none."""
-    if not del_paths:
-        return None
-    d = read_deleted_ids(
-        del_paths, int(bl["first_doc_id"].min()), int(bl["last_doc_id"].max())
-    )
-    return d if len(d) else None
-
-
 def _set_doc_ids(tdata, terms, mode, deleted=None):
     """Matching LIVE doc ids of one term set within one unit (numpy);
     tombstoned docs never count ("About N results" is the live number)."""
-    import numpy as np
-
     arrs = [tdata[t][0] for t in terms if t in tdata]
     if mode == spec.MODE_CONJUNCTIVE:
         if len(arrs) < len(terms):
@@ -118,6 +99,24 @@ def _set_doc_ids(tdata, terms, mode, deleted=None):
     return out if len(out) else None
 
 
+def _term_rows(set_terms, tdata, deleted, col):
+    """Per-(set, term) LIVE match rows of one unit: (set_idx, term, doc_id,
+    <col>) where <col> is the decoder's second array (score part or
+    int64 raw tf)."""
+    for si, terms in enumerate(set_terms):
+        for t in terms:
+            if t not in tdata:
+                continue
+            ids, vals = tdata[t][0], tdata[t][1]
+            if deleted is not None and len(ids):
+                keep = ~np.isin(ids, deleted)
+                ids, vals = ids[keep], vals[keep]
+            if len(ids):
+                yield pd.DataFrame(
+                    {"set_idx": si, "term": t, "doc_id": ids, col: vals}
+                )
+
+
 def match_counts(
     spark: SparkSession,
     index_root: str,
@@ -130,38 +129,19 @@ def match_counts(
     if plan is None:
         return empty
     set_terms, map_df, units, corpus_terms, del_paths, _, _ = plan
-    b = spark.sparkContext.broadcast((set_terms, corpus_terms, mode, del_paths))
 
-    def count_units(pdfs):
-        import pandas as pd
-        import pyarrow.dataset as pds
+    def count_unit(tdata, deleted):
+        rows = []
+        for si, terms in enumerate(set_terms):
+            ids = _set_doc_ids(tdata, terms, mode, deleted)
+            if ids is not None:
+                rows.append((si, len(ids)))
+        if rows:
+            yield pd.DataFrame(rows, columns=["set_idx", "n"])
 
-        sets_l, terms_l, mode_l, del_paths_l = b.value
-        for updf in pdfs:
-            for path in updf["path"]:
-                tbl = pds.dataset(path).to_table(
-                    columns=_POSTINGS_READ_COLS,
-                    filter=pds.field("term").isin(terms_l),
-                )
-                if tbl.num_rows == 0:
-                    continue
-                bl = tbl.to_pandas()
-                bl["shard"] = 0
-                tdata = {
-                    t: decode_term_postings_stream(g, 1.0)
-                    for t, g in bl.groupby("term", sort=True)
-                }
-                deleted = _unit_deleted(del_paths_l, bl)
-                rows = []
-                for si, terms in enumerate(sets_l):
-                    ids = _set_doc_ids(tdata, terms, mode_l, deleted)
-                    if ids is not None:
-                        rows.append((si, len(ids)))
-                if rows:
-                    yield pd.DataFrame(rows, columns=["set_idx", "n"])
-
-    partials = _unit_scan(
-        spark, units, (count_units, "set_idx int, n long")
+    partials = scan_units(
+        spark, units, corpus_terms, del_paths, decode_term_postings_raw,
+        count_unit, "set_idx int, n long",
     )
     return (
         partials.groupBy("set_idx")
@@ -183,34 +163,17 @@ def match_docs(
     if plan is None:
         return empty
     set_terms, map_df, units, corpus_terms, del_paths, _, _ = plan
-    b = spark.sparkContext.broadcast((set_terms, corpus_terms, mode, del_paths))
 
-    def pair_units(pdfs):
-        import pandas as pd
-        import pyarrow.dataset as pds
+    def pair_unit(tdata, deleted):
+        for si, terms in enumerate(set_terms):
+            ids = _set_doc_ids(tdata, terms, mode, deleted)
+            if ids is not None:
+                yield pd.DataFrame({"set_idx": si, "doc_id": ids})
 
-        sets_l, terms_l, mode_l, del_paths_l = b.value
-        for updf in pdfs:
-            for path in updf["path"]:
-                tbl = pds.dataset(path).to_table(
-                    columns=_POSTINGS_READ_COLS,
-                    filter=pds.field("term").isin(terms_l),
-                )
-                if tbl.num_rows == 0:
-                    continue
-                bl = tbl.to_pandas()
-                bl["shard"] = 0
-                tdata = {
-                    t: decode_term_postings_stream(g, 1.0)
-                    for t, g in bl.groupby("term", sort=True)
-                }
-                deleted = _unit_deleted(del_paths_l, bl)
-                for si, terms in enumerate(sets_l):
-                    ids = _set_doc_ids(tdata, terms, mode_l, deleted)
-                    if ids is not None:
-                        yield pd.DataFrame({"set_idx": si, "doc_id": ids})
-
-    pairs = _unit_scan(spark, units, (pair_units, "set_idx int, doc_id long"))
+    pairs = scan_units(
+        spark, units, corpus_terms, del_paths, decode_term_postings_raw,
+        pair_unit, "set_idx int, doc_id long",
+    )
     return pairs.join(F.broadcast(map_df), "set_idx").select("query_id", "doc_id")
 
 
@@ -260,71 +223,44 @@ def score_docs(
     if plan is None:
         return empty
     set_terms, map_df, units, corpus_terms, del_paths, idf, avgdl = plan
-    b = spark.sparkContext.broadcast(
-        (set_terms, corpus_terms, mode, del_paths, idf, avgdl, with_matched,
-         tie_breaker)
+    conj = mode == spec.MODE_CONJUNCTIVE
+
+    def score_unit(tdata, deleted):
+        for si, terms in enumerate(set_terms):
+            present = [t for t in terms if t in tdata]
+            if not present or (conj and len(present) < len(terms)):
+                continue  # some term absent from this doc range
+            ids = np.concatenate([tdata[t][0] for t in present])
+            sc = np.concatenate([idf[t] * tdata[t][1] for t in present])
+            uniq, inv = np.unique(ids, return_inverse=True)
+            sums = np.zeros(len(uniq))
+            np.add.at(sums, inv, sc)
+            if tie_breaker is not None:
+                best = np.full(len(uniq), -np.inf)
+                np.maximum.at(best, inv, sc)
+                sums = best + tie_breaker * (sums - best)
+            cnt = None
+            if with_matched or conj:
+                cnt = np.zeros(len(uniq), dtype=np.int64)
+                np.add.at(cnt, inv, 1)
+            if conj:
+                keep = cnt == len(terms)
+                uniq, sums, cnt = uniq[keep], sums[keep], cnt[keep]
+            if deleted is not None and len(uniq):
+                keep = ~np.isin(uniq, deleted)
+                uniq, sums = uniq[keep], sums[keep]
+                if cnt is not None:
+                    cnt = cnt[keep]
+            if len(uniq):
+                cols = {"set_idx": si, "doc_id": uniq, "score": sums}
+                if with_matched:
+                    cols["n_matched"] = cnt.astype("int32")
+                yield pd.DataFrame(cols)
+
+    rel = scan_units(
+        spark, units, corpus_terms, del_paths,
+        lambda g: decode_term_postings_stream(g, avgdl), score_unit, rel_schema,
     )
-
-    def score_units(pdfs):
-        import numpy as np
-        import pandas as pd
-        import pyarrow.dataset as pds
-
-        (sets_l, terms_l, mode_l, del_paths_l, idf_l, avgdl_l,
-         matched_l, tie_l) = b.value
-        for updf in pdfs:
-            for path in updf["path"]:
-                tbl = pds.dataset(path).to_table(
-                    columns=_POSTINGS_READ_COLS,
-                    filter=pds.field("term").isin(terms_l),
-                )
-                if tbl.num_rows == 0:
-                    continue
-                bl = tbl.to_pandas()
-                bl["shard"] = 0
-                tdata = {
-                    t: decode_term_postings_stream(g, avgdl_l)
-                    for t, g in bl.groupby("term", sort=True)
-                }
-                deleted = _unit_deleted(del_paths_l, bl)
-                for si, terms in enumerate(sets_l):
-                    present = [t for t in terms if t in tdata]
-                    if mode_l == spec.MODE_CONJUNCTIVE and len(present) < len(
-                        terms
-                    ):
-                        continue  # some term absent from this doc range
-                    if not present:
-                        continue
-                    ids = np.concatenate([tdata[t][0] for t in present])
-                    sc = np.concatenate(
-                        [idf_l[t] * tdata[t][1] for t in present]
-                    )
-                    uniq, inv = np.unique(ids, return_inverse=True)
-                    sums = np.zeros(len(uniq))
-                    np.add.at(sums, inv, sc)
-                    if tie_l is not None:
-                        best = np.full(len(uniq), -np.inf)
-                        np.maximum.at(best, inv, sc)
-                        sums = best + tie_l * (sums - best)
-                    cnt = None
-                    if matched_l or mode_l == spec.MODE_CONJUNCTIVE:
-                        cnt = np.zeros(len(uniq), dtype=np.int64)
-                        np.add.at(cnt, inv, 1)
-                    if mode_l == spec.MODE_CONJUNCTIVE:
-                        keep = cnt == len(terms)
-                        uniq, sums, cnt = uniq[keep], sums[keep], cnt[keep]
-                    if deleted is not None and len(uniq):
-                        keep = ~np.isin(uniq, deleted)
-                        uniq, sums = uniq[keep], sums[keep]
-                        if cnt is not None:
-                            cnt = cnt[keep]
-                    if len(uniq):
-                        cols = {"set_idx": si, "doc_id": uniq, "score": sums}
-                        if matched_l:
-                            cols["n_matched"] = cnt.astype("int32")
-                        yield pd.DataFrame(cols)
-
-    rel = _unit_scan(spark, units, (score_units, rel_schema))
     out_cols = ["query_id", "doc_id", "score"] + (
         ["n_matched"] if with_matched else []
     )
@@ -355,48 +291,11 @@ def term_norms(
     if plan is None:
         return empty
     set_terms, map_df, units, corpus_terms, del_paths, _idf, avgdl = plan
-    b = spark.sparkContext.broadcast(
-        (set_terms, corpus_terms, del_paths, avgdl)
-    )
-
-    def norm_units(pdfs):
-        import numpy as np
-        import pandas as pd
-        import pyarrow.dataset as pds
-
-        sets_l, terms_l, del_paths_l, avgdl_l = b.value
-        for updf in pdfs:
-            for path in updf["path"]:
-                tbl = pds.dataset(path).to_table(
-                    columns=_POSTINGS_READ_COLS,
-                    filter=pds.field("term").isin(terms_l),
-                )
-                if tbl.num_rows == 0:
-                    continue
-                bl = tbl.to_pandas()
-                bl["shard"] = 0
-                tdata = {
-                    t: decode_term_postings_stream(g, avgdl_l)
-                    for t, g in bl.groupby("term", sort=True)
-                }
-                deleted = _unit_deleted(del_paths_l, bl)
-                for si, terms in enumerate(sets_l):
-                    for t in terms:
-                        if t not in tdata:
-                            continue
-                        ids, tfn = tdata[t][0], tdata[t][1]
-                        if deleted is not None and len(ids):
-                            keep = ~np.isin(ids, deleted)
-                            ids, tfn = ids[keep], tfn[keep]
-                        if len(ids):
-                            yield pd.DataFrame(
-                                {"set_idx": si, "term": t,
-                                 "doc_id": ids, "tfnorm": tfn}
-                            )
-
-    rel = _unit_scan(
-        spark, units,
-        (norm_units, "set_idx int, term string, doc_id long, tfnorm double"),
+    rel = scan_units(
+        spark, units, corpus_terms, del_paths,
+        lambda g: decode_term_postings_stream(g, avgdl),
+        lambda tdata, deleted: _term_rows(set_terms, tdata, deleted, "tfnorm"),
+        "set_idx int, term string, doc_id long, tfnorm double",
     )
     return rel.join(F.broadcast(map_df), "set_idx").select(
         "query_id", "term", "doc_id", "tfnorm"
@@ -422,49 +321,10 @@ def term_raw(
     if plan is None:
         return empty
     set_terms, map_df, units, corpus_terms, del_paths, _idf, _avgdl = plan
-    b = spark.sparkContext.broadcast((set_terms, corpus_terms, del_paths))
-
-    def raw_units(pdfs):
-        import numpy as np
-        import pandas as pd
-        import pyarrow.dataset as pds
-
-        from ..operators.topk import decode_term_postings_raw
-
-        sets_l, terms_l, del_paths_l = b.value
-        for updf in pdfs:
-            for path in updf["path"]:
-                tbl = pds.dataset(path).to_table(
-                    columns=_POSTINGS_READ_COLS,
-                    filter=pds.field("term").isin(terms_l),
-                )
-                if tbl.num_rows == 0:
-                    continue
-                bl = tbl.to_pandas()
-                bl["shard"] = 0
-                tdata = {
-                    t: decode_term_postings_raw(g)
-                    for t, g in bl.groupby("term", sort=True)
-                }
-                deleted = _unit_deleted(del_paths_l, bl)
-                for si, terms in enumerate(sets_l):
-                    for t in terms:
-                        if t not in tdata:
-                            continue
-                        ids, tfs = tdata[t][0], tdata[t][1]
-                        if deleted is not None and len(ids):
-                            keep = ~np.isin(ids, deleted)
-                            ids, tfs = ids[keep], tfs[keep]
-                        if len(ids):
-                            yield pd.DataFrame(
-                                {"set_idx": si, "term": t,
-                                 "doc_id": ids,
-                                 "tf": tfs.astype("int64")}
-                            )
-
-    rel = _unit_scan(
-        spark, units,
-        (raw_units, "set_idx int, term string, doc_id long, tf long"),
+    rel = scan_units(
+        spark, units, corpus_terms, del_paths, decode_term_postings_raw,
+        lambda tdata, deleted: _term_rows(set_terms, tdata, deleted, "tf"),
+        "set_idx int, term string, doc_id long, tf long",
     )
     return rel.join(F.broadcast(map_df), "set_idx").select(
         "query_id", "term", "doc_id", "tf"

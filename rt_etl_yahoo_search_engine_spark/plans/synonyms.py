@@ -27,20 +27,22 @@ postings (isin pushdown), decodes raw (doc_id, tf, doc_len) streams
 once, blends clause-locally in numpy, and emits narrow (query, doc,
 score) rows; doc-range sharding makes per-doc sums unit-complete, so
 no re-aggregation shuffle.  The synonym table itself is query-metadata
-(broadcast with the plan), never a corpus-side join.
+(shipped with the plan), never a corpus-side join.
 """
 
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .. import spec
 from ..operators.deletes import deleted_dir_paths
-from ..operators.topk import decode_doc_ids_stream, decode_varbyte_stream
+from ..operators.topk import decode_term_postings_raw
+from ..operators.unitscan import scan_units, shard_units
 from ..sources.catalog import Catalog
-from .bm25 import _POSTINGS_READ_COLS, _shard_units, lexicon_idf
-from .stats import _unit_deleted, _unit_scan
+from .bm25 import lexicon_idf
 
 
 def expand_clauses(
@@ -91,81 +93,54 @@ def synonym_topk(
                 built.append((present, min(idf[t] for t in present)))
         if built:
             qplan.append((qid, built))
-    units = _shard_units(cat, reg, avgdl)
+    units = shard_units(cat, reg)
     if not qplan or not units:
         return empty
     corpus_terms = sorted({t for _, cls in qplan for ms, _ in cls for t in ms})
-    b = spark.sparkContext.broadcast(
-        (qplan, corpus_terms, deleted_dir_paths(cat, reg), avgdl)
-    )
-    schema = "query_id string, doc_id long, score double"
+    k1, bb = spec.K1, spec.B
 
-    def blend_units(pdfs):
-        import numpy as np
-        import pandas as pd
-        import pyarrow.dataset as pds
-
-        qplan_l, terms_l, del_paths_l, avgdl_l = b.value
-        k1, bb = spec.K1, spec.B
-        for updf in pdfs:
-            for path in updf["path"]:
-                tbl = pds.dataset(path).to_table(
-                    columns=_POSTINGS_READ_COLS,
-                    filter=pds.field("term").isin(terms_l),
-                )
-                if tbl.num_rows == 0:
+    def blend_unit(raw, deleted):
+        for qid, clauses in qplan:
+            cl_ids, cl_ws = [], []
+            for members, c_idf in clauses:
+                have = [m for m in members if m in raw]
+                if not have:
                     continue
-                bl = tbl.to_pandas()
-                bl["shard"] = 0
-                raw = {}
-                for t, g in bl.groupby("term", sort=True):
-                    g = g.sort_values(["shard", "first_doc_id"])
-                    ids = decode_doc_ids_stream(g["doc_ids_vb"])
-                    if not len(ids):
-                        continue
-                    raw[t] = (
-                        ids,
-                        decode_varbyte_stream(g["tfs_vb"]),
-                        decode_varbyte_stream(g["doc_lens_vb"]),
-                    )
-                deleted = _unit_deleted(del_paths_l, bl)
-                for qid, clauses in qplan_l:
-                    cl_ids, cl_ws = [], []
-                    for members, c_idf in clauses:
-                        have = [m for m in members if m in raw]
-                        if not have:
-                            continue
-                        ids = np.concatenate([raw[m][0] for m in have])
-                        tfs = np.concatenate([raw[m][1] for m in have])
-                        dls = np.concatenate([raw[m][2] for m in have])
-                        uniq, inv = np.unique(ids, return_inverse=True)
-                        tf_sum = np.zeros(len(uniq))
-                        np.add.at(tf_sum, inv, tfs)
-                        dl = np.zeros(len(uniq))
-                        dl[inv] = dls  # doc_len is per-doc, any write wins
-                        w = c_idf * (
-                            tf_sum
-                            * (k1 + 1.0)
-                            / (tf_sum + k1 * (1.0 - bb + bb * dl / avgdl_l))
-                        )
-                        cl_ids.append(uniq)
-                        cl_ws.append(w)
-                    if not cl_ids:
-                        continue
-                    ids = np.concatenate(cl_ids)
-                    ws = np.concatenate(cl_ws)
-                    uniq, inv = np.unique(ids, return_inverse=True)
-                    sums = np.zeros(len(uniq))
-                    np.add.at(sums, inv, ws)
-                    if deleted is not None and len(uniq):
-                        keep = ~np.isin(uniq, deleted)
-                        uniq, sums = uniq[keep], sums[keep]
-                    if len(uniq):
-                        yield pd.DataFrame(
-                            {"query_id": qid, "doc_id": uniq, "score": sums}
-                        )
+                ids = np.concatenate([raw[m][0] for m in have])
+                tfs = np.concatenate([raw[m][1] for m in have])
+                dls = np.concatenate([raw[m][2] for m in have])
+                uniq, inv = np.unique(ids, return_inverse=True)
+                tf_sum = np.zeros(len(uniq))
+                np.add.at(tf_sum, inv, tfs)
+                dl = np.zeros(len(uniq))
+                dl[inv] = dls  # doc_len is per-doc, any write wins
+                w = c_idf * (
+                    tf_sum
+                    * (k1 + 1.0)
+                    / (tf_sum + k1 * (1.0 - bb + bb * dl / avgdl))
+                )
+                cl_ids.append(uniq)
+                cl_ws.append(w)
+            if not cl_ids:
+                continue
+            ids = np.concatenate(cl_ids)
+            ws = np.concatenate(cl_ws)
+            uniq, inv = np.unique(ids, return_inverse=True)
+            sums = np.zeros(len(uniq))
+            np.add.at(sums, inv, ws)
+            if deleted is not None and len(uniq):
+                keep = ~np.isin(uniq, deleted)
+                uniq, sums = uniq[keep], sums[keep]
+            if len(uniq):
+                yield pd.DataFrame(
+                    {"query_id": qid, "doc_id": uniq, "score": sums}
+                )
 
-    rel = _unit_scan(spark, units, (blend_units, schema))
+    rel = scan_units(
+        spark, units, corpus_terms, deleted_dir_paths(cat, reg),
+        decode_term_postings_raw, blend_unit,
+        "query_id string, doc_id long, score double",
+    )
     w = Window.partitionBy("query_id").orderBy(
         F.desc("score"), F.asc("doc_id")
     )

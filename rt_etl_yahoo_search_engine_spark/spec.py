@@ -1,6 +1,6 @@
 """Single source of truth for engine-wide constants and scoring math.
 
-Both the optimized engine path (compressed postings + block-max WAND) and the
+Both the optimized engine path (compressed postings + batch scorer) and the
 exhaustive oracle path (plain DataFrame scoring) import THIS module, so any
 drift between them is impossible by construction.  The DuckDB oracle SQL in
 ``__spark_entry__.py`` mirrors these definitions textually; tests assert the
@@ -12,7 +12,7 @@ IDF is the standard Robertson/Sparck-Jones "plus one" form used by Lucene:
 which is always positive (no negative-idf clamping needed).
 
 Tie-break contract for top-k: score DESC, doc_id ASC.  Both paths sort this
-way and the WAND proof-of-equivalence test relies on it.
+way and the scorer property tests rely on it.
 """
 
 from __future__ import annotations
@@ -63,7 +63,7 @@ def bm25_upper_bound(max_tf: int, term_idf: float) -> float:
 
 
 # --- postings layout -----------------------------------------------------------
-BLOCK_SIZE: int = 128  # docs per compressed posting block (block-max WAND unit)
+BLOCK_SIZE: int = 128  # docs per compressed posting block
 INDEX_FORMAT_VERSION = 6  # bump when the on-disk index schema changes
 
 # Skew handling (north_rule "term-frequency salting of head terms"): the

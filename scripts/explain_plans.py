@@ -62,10 +62,10 @@ def main() -> None:
     sections.append((
         "BM25 top-k (scan-side vectorized TAAT over compressed postings)",
         "The plan must contain NO exchange carrying posting payload bytes: "
-        "the only input is the metadata-scale (path, factor) unit list fed "
+        "the only input is the metadata-scale (path) unit list fed "
         "to `MapInPandas` (one task per (segment, shard) reads its own "
         "shard directory via pyarrow with term-isin row-group pruning and "
-        "scores the whole broadcast query batch vectorized), and the only "
+        "scores the whole query batch vectorized), and the only "
         "wide exchange is the k-rows-per-(query,shard) window merge.",
         captured_plan(
             topk(spark, idx, {"q": "chicken rice", "q2": "coffee"}, k=10)
@@ -147,7 +147,7 @@ def main() -> None:
     sections.append((
         "Alternative similarity (LM-Dirichlet) over the same index",
         "Identical shape to the scan-side BM25 batch path: the only "
-        "input is the metadata-scale (path, factor) unit list into "
+        "input is the metadata-scale (path) unit list into "
         "`MapInPandas` (each unit reads its own shard dir with term-isin "
         "row-group pruning and emits k rows per set), the per-query map "
         "is a broadcast join, and the only wide exchange is the "

@@ -3,11 +3,9 @@
   * extend(base, delta) answers every reference query with doc_ids and
     scores IDENTICAL to a fresh full build over base+delta (the delta urls
     sort after the base urls, so even doc_id assignment coincides);
-  * the WAND bound stays safe when the global avgdl DRIFTS UP after an
-    extension (delta docs much longer than base) — the case where the old
-    segment's baked block_max_part would under-bound without the
-    max(1, avgdl/avgdl_seg) correction — verified against the exhaustive
-    oracle, which shares no pruning code;
+  * scores stay exact when the global avgdl DRIFTS UP after an extension
+    (delta docs much longer than base): every segment decodes against the
+    CURRENT avgdl, verified against the exhaustive oracle;
   * the serving path reads the extended index identically;
   * visibility is atomic: before the registry commit a reader sees the base
     index unchanged.
@@ -114,11 +112,10 @@ def _text_pages(spark, start: int, n: int, words_per_doc: int):
 
 
 def test_extend_avgdl_drift_up(spark, tmp_path):
-    """Old-segment bounds must stay safe when avgdl RISES after an
-    extension: base docs are 30 words, delta docs 600 words (20x), so the
-    base segment's baked block_max_part under-bounds true scores unless the
-    query side applies the max(1, avgdl/avgdl_seg) correction.  WAND must
-    still match the exhaustive oracle (which shares no pruning code)."""
+    """Old segments must score against the CURRENT avgdl when it RISES
+    after an extension: base docs are 30 words, delta docs 600 words
+    (20x), so a decode against the base segment's encode-time avgdl would
+    give wrong scores.  topk must still match the exhaustive oracle."""
     root = str(tmp_path / "idx")
     build_index(spark, _text_pages(spark, 0, 200, 30), root,
                 n_shards=2, n_buckets=4, tokenizer="text")

@@ -47,6 +47,60 @@ def test_url_ordered_text_tokenizer_dataframe_input(spark, tmp_path):
         assert score == pytest.approx(wscore, abs=1e-9), k_
 
 
+def test_url_ordered_text_tokenizer_multi_partition_tokens(spark, tmp_path):
+    """Regression: url_ordered + tokenizer='text' whose tokens span several
+    shuffle partitions.  tokens_from_text's grouping-sets aggregate
+    hash-exchanges the tokens, so its files are not doc-contiguous;
+    encoding them without the (term, shard) exchange wrote posting blocks
+    with overlapping doc ranges, and topk raised "posting blocks overlap".
+    The sf0.001 case above is small enough for AQE to coalesce the
+    exchange into one partition, which hid it; here coalescing is off, so
+    the tokens land in every shuffle partition whatever the data size."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    rng = np.random.default_rng(5)
+    vocab = np.array([f"w{i:04d}" for i in range(2000)])
+    n = 400
+    texts = [
+        " ".join(vocab[rng.integers(0, len(vocab), 100)])
+        + (" alpha beta" if i % 5 == 0 else "")
+        for i in range(n)
+    ]
+    (tmp_path / "pages").mkdir()
+    pq.write_table(  # one url-sorted file: a valid url_ordered table
+        pa.table({
+            "url": [f"u{i:06d}" for i in range(n)],
+            "text": texts,
+            "lang": ["en"] * n,
+        }),
+        str(tmp_path / "pages" / "part-0.parquet"),
+    )
+    root = str(tmp_path / "idx")
+    coalesce = "spark.sql.adaptive.coalescePartitions.enabled"
+    old = spark.conf.get(coalesce)
+    spark.conf.set(coalesce, "false")
+    try:
+        build_index(spark, str(tmp_path / "pages"), root, n_shards=4,
+                    n_buckets=8, tokenizer="text", url_ordered=True)
+    finally:
+        spark.conf.set(coalesce, old)
+
+    queries = {"qa": "alpha beta", "qb": "w0003 w0120 w1999"}
+    for mode in (spec.MODE_DISJUNCTIVE, spec.MODE_CONJUNCTIVE):
+        got = topk(spark, root, queries, mode=mode, k=10).collect()
+        want = topk_oracle(spark, root, queries, mode=mode, k=10).collect()
+        key = lambda r: (r["query_id"], r["rank"])  # noqa: E731
+        got_m = {key(r): (r["doc_id"], r["score"]) for r in got}
+        want_m = {key(r): (r["doc_id"], r["score"]) for r in want}
+        assert set(got_m) == set(want_m) and len(got_m) > 0
+        for k_, (doc, score) in got_m.items():
+            wdoc, wscore = want_m[k_]
+            assert doc == wdoc, k_
+            assert score == pytest.approx(wscore, abs=1e-9), k_
+
+
 def test_url_ordered_many_small_files(spark, tmp_path):
     pages = str(tmp_path / "pages")
     # 600 docs over 24 files (~25 docs each): far below the 16 MB split

@@ -1,9 +1,12 @@
-"""Property test: block-max WAND == naive exhaustive scoring on random
-posting lists (pure Python level — no Spark), including adversarial ties,
-tiny blocks, and single-posting terms."""
+"""Property tests for the production scorer stack (pure Python level — no
+Spark): the term-level decode, taat_topk, DenseScorer and BatchScorer
+against an independent naive exhaustive reference and against each other,
+on random posting lists with adversarial ties, tiny blocks, and
+single-posting terms."""
 
 import numpy as np
 import pandas as pd
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
@@ -15,37 +18,10 @@ from rt_etl_yahoo_search_engine_spark.operators.codec import (
 from rt_etl_yahoo_search_engine_spark.operators.topk import (
     BatchScorer,
     DenseScorer,
-    _Cursor,
-    decode_term_postings,
+    decode_term_postings_raw,
     decode_term_postings_stream,
     taat_topk,
-    wand_topk,
 )
-
-
-def _make_cursor(idf, doc_ids, tfs, dls, avgdl, block_size):
-    rows = []
-    for s in range(0, len(doc_ids), block_size):
-        e = min(s + block_size, len(doc_ids))
-        ids = np.array(doc_ids[s:e])
-        t = np.array(tfs[s:e])
-        d = np.array(dls[s:e])
-        parts = (t * (spec.K1 + 1.0)) / (
-            t + spec.K1 * (1.0 - spec.B + spec.B * d / avgdl)
-        )
-        rows.append(
-            {
-                "shard": 0,
-                "block_id": s // block_size,
-                "first_doc_id": ids[0],
-                "last_doc_id": ids[-1],
-                "block_max_score": idf * parts.max(),
-                "doc_ids_vb": encode_doc_ids(ids),
-                "tfs_vb": encode_varbyte(t),
-                "doc_lens_vb": encode_varbyte(d),
-            }
-        )
-    return _Cursor(idf, pd.DataFrame(rows), avgdl)
 
 
 def _naive(term_postings, idfs, avgdl, k, mode, n_terms):
@@ -95,24 +71,6 @@ def corpus(draw):
     return n_docs, postings, k, block_size, mode
 
 
-@settings(max_examples=300, deadline=None)
-@given(corpus())
-def test_wand_equals_naive(c):
-    n_docs, postings, k, block_size, mode = c
-    avgdl = 25.0
-    idfs = {t: spec.idf(n_docs, len(p[0])) for t, p in postings.items()}
-    cursors = [
-        _make_cursor(idfs[t], *p, avgdl=avgdl, block_size=block_size)
-        for t, p in sorted(postings.items())
-    ]
-    got = wand_topk(cursors, k, mode, n_terms=len(postings))
-    got.sort(key=lambda x: (-x[1], x[0]))
-    want = _naive(postings, idfs, avgdl, k, mode, len(postings))
-    assert [g[0] for g in got] == [w[0] for w in want]
-    for (gd, gs), (wd, ws) in zip(got, want):
-        assert abs(gs - ws) <= 1e-12 * max(1.0, abs(ws))
-
-
 def _make_blocks_pdf(idf, doc_ids, tfs, dls, avgdl, block_size):
     """The raw block frame (as read from a shard dir) for one term."""
     rows = []
@@ -141,18 +99,16 @@ def _make_blocks_pdf(idf, doc_ids, tfs, dls, avgdl, block_size):
 @settings(max_examples=300, deadline=None)
 @given(corpus())
 def test_taat_equals_naive(c):
-    """The vectorized batch scorer (production scan-side path) matches the
-    independent exhaustive reference, same generator as the WAND test."""
+    """The term-level decode + vectorized TAAT scorer matches the
+    independent exhaustive reference."""
     n_docs, postings, k, block_size, mode = c
     avgdl = 25.0
     idfs = {t: spec.idf(n_docs, len(p[0])) for t, p in postings.items()}
-    cache: dict = {}
     decoded = [
         (
-            *decode_term_postings(
+            *decode_term_postings_stream(
                 _make_blocks_pdf(idfs[t], *p, avgdl=avgdl, block_size=block_size),
                 avgdl,
-                cache=cache,
             ),
             idfs[t],
         )
@@ -176,13 +132,11 @@ def test_dense_equals_taat_bit_identical(c):
     n_docs, postings, k, block_size, mode = c
     avgdl = 25.0
     idfs = {t: spec.idf(n_docs, len(p[0])) for t, p in postings.items()}
-    cache: dict = {}
     decoded = [
         (
-            *decode_term_postings(
+            *decode_term_postings_stream(
                 _make_blocks_pdf(idfs[t], *p, avgdl=avgdl, block_size=block_size),
                 avgdl,
-                cache=cache,
             ),
             idfs[t],
         )
@@ -194,6 +148,22 @@ def test_dense_equals_taat_bit_identical(c):
 
 
 _DENSE = DenseScorer()
+
+
+def test_overlapping_blocks_raise():
+    """The shared block decode refuses a term whose block doc ranges
+    overlap (a wrong url_ordered declaration at build time) instead of
+    silently dropping or duplicating docs — for every decoder, since the
+    score-part decode goes through the raw one."""
+    pdf = _make_blocks_pdf(1.0, [1, 5, 9, 12], [1, 2, 1, 3], [10, 20, 10, 30],
+                           avgdl=25.0, block_size=2)
+    pdf.loc[1, "first_doc_id"] = 4  # blocks [1, 5] and [4, 12] overlap
+    for decode in (decode_term_postings_raw,
+                   lambda g: decode_term_postings_stream(g, 25.0)):
+        with pytest.raises(ValueError, match="posting blocks overlap"):
+            decode(pdf)
+    pdf.loc[1, "first_doc_id"] = 9  # disjoint again: decodes cleanly
+    assert decode_term_postings_raw(pdf)[0].tolist() == [1, 5, 9, 12]
 
 
 def test_dense_sparse_fallback_identical():
@@ -222,18 +192,24 @@ def test_batch_scorer_bit_identical(c):
     BIT-IDENTICAL (doc, score) results to taat_topk for both modes: the
     per-doc float add order is the same ascending-term order (missing
     terms contribute +0.0, exact).  Also pins the term-level stream decode
-    (production decode path) bit-identical to the per-block decode."""
+    (production decode path) to the generator's postings: raw columns
+    exact, score parts bit-identical to the score expression applied to
+    the undecoded arrays."""
     n_docs, postings, k, block_size, mode = c
     avgdl = 25.0
     idfs = {t: spec.idf(n_docs, len(p[0])) for t, p in postings.items()}
-    cache: dict = {}
     tdata = {}
     for t, p in postings.items():
         pdf = _make_blocks_pdf(idfs[t], *p, avgdl=avgdl, block_size=block_size)
+        ids, tfs, dls = (np.asarray(a, dtype=np.int64) for a in p)
+        raw = decode_term_postings_raw(pdf)
+        assert all(np.array_equal(g, w) for g, w in zip(raw, (ids, tfs, dls)))
         ids_s, parts_s = decode_term_postings_stream(pdf, avgdl)
-        ids_b, parts_b = decode_term_postings(pdf, avgdl, cache=cache)
-        assert np.array_equal(ids_s, ids_b)
-        assert parts_s.tobytes() == parts_b.tobytes()  # bit-exact floats
+        want = (tfs * (spec.K1 + 1.0)) / (
+            tfs + spec.K1 * (1.0 - spec.B + spec.B * dls / avgdl)
+        )
+        assert np.array_equal(ids_s, ids)
+        assert parts_s.tobytes() == want.tobytes()  # bit-exact floats
         tdata[t] = (ids_s, parts_s)
     terms = sorted(postings)
     decoded = [(*tdata[t], idfs[t]) for t in terms]
