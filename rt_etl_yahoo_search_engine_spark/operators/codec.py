@@ -116,6 +116,25 @@ def _decode_stream(b: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
     return out, term_idx
 
 
+def _stream_bytes(bufs) -> tuple[np.ndarray, np.ndarray]:
+    """(concatenated block bytes as uint8, per-block byte lengths).
+
+    An Arrow binary array is read in place from its values buffer (no
+    per-block Python bytes objects); any other sequence of bytes-like
+    blocks is joined."""
+    if hasattr(bufs, "buffers"):
+        odt = np.int64 if "large" in str(bufs.type) else np.int32
+        _, ob, db = bufs.buffers()[:3]
+        offs = np.frombuffer(ob, dtype=odt)[bufs.offset : bufs.offset + len(bufs) + 1]
+        if db is None or not len(bufs):
+            return np.empty(0, dtype=np.uint8), np.zeros(len(bufs), dtype=np.int64)
+        b = np.frombuffer(db, dtype=np.uint8)[offs[0] : offs[-1]]
+        return b, np.diff(offs).astype(np.int64)
+    bufs = list(bufs)
+    lens = np.fromiter((len(x) for x in bufs), dtype=np.int64, count=len(bufs))
+    return np.frombuffer(b"".join(bufs), dtype=np.uint8), lens
+
+
 def decode_varbyte_stream(bufs) -> np.ndarray:
     """Decode a SEQUENCE of varbyte blocks as one concatenated stream.
 
@@ -123,8 +142,7 @@ def decode_varbyte_stream(bufs) -> np.ndarray:
     decodes to the concatenation of their values — one vectorized pass
     instead of ~8 numpy ops per 128-value block (the per-block call
     overhead dominated the query path's decode cost)."""
-    buf = b"".join(bufs)
-    b = np.frombuffer(buf, dtype=np.uint8)
+    b, _ = _stream_bytes(bufs)
     if b.size == 0:
         return np.empty(0, dtype=np.int64)
     return _decode_stream(b)[0]
@@ -138,10 +156,7 @@ def decode_doc_ids_stream(bufs) -> np.ndarray:
     block's total into the next.  The fix is vectorized: at each block's
     first value the running cumsum is re-based to that block's absolute
     first id (subtract the cumsum accumulated before the block)."""
-    bufs = list(bufs)
-    lens = np.fromiter((len(x) for x in bufs), dtype=np.int64, count=len(bufs))
-    buf = b"".join(bufs)
-    b = np.frombuffer(buf, dtype=np.uint8)
+    b, lens = _stream_bytes(bufs)
     if b.size == 0:
         return np.empty(0, dtype=np.int64)
     g, term_idx = _decode_stream(b)
@@ -153,3 +168,12 @@ def decode_doc_ids_stream(bufs) -> np.ndarray:
     corr = c[vstarts] - g[vstarts]
     counts = np.diff(np.append(vstarts, len(g)))
     return c - np.repeat(corr, counts)
+
+
+def block_value_starts(bufs) -> np.ndarray:
+    """Index of each block's first value in the decoded stream of `bufs`,
+    then the stream's value count (len(bufs) + 1 entries): the number of
+    terminator bytes before each block's first byte."""
+    b, lens = _stream_bytes(bufs)
+    bounds = np.concatenate(([0], np.cumsum(lens)))
+    return np.searchsorted(np.flatnonzero(b & 0x80), bounds)

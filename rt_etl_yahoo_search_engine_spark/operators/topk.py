@@ -31,7 +31,11 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from .. import spec
-from .codec import decode_doc_ids_stream, decode_varbyte_stream
+from .codec import (
+    block_value_starts,
+    decode_doc_ids_stream,
+    decode_varbyte_stream,
+)
 
 # the block columns the query-side decoders read (shard, where a reader
 # needs it, is the hive partition parsed from the directory name)
@@ -45,43 +49,119 @@ POSTINGS_READ_COLS = [
 ]
 
 
-def decode_term_postings_raw(
-    block_pdf: pd.DataFrame,
+def _decode_blocks(
+    firsts: np.ndarray, lasts: np.ndarray, new_term: np.ndarray,
+    ids_vb, tfs_vb, dls_vb,
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """(doc_ids, tfs, doc_lens) of one term's blocks, doc_ids ascending.
+    """(doc_ids, tfs, doc_lens) of blocks sorted by (term, first_doc_id);
+    new_term[i] marks block i as the first of its term.
 
     All blocks decode as ONE concatenated varbyte stream per column
     (codec.decode_*_stream) — one vectorized pass instead of ~8 numpy
     dispatches per 128-doc block.  This is the query side's only block
     decode, so its block-overlap check guards every plan: overlapping
-    block doc ranges would silently drop or duplicate docs."""
-    block_pdf = block_pdf.sort_values(["shard", "first_doc_id"])
-    firsts = block_pdf["first_doc_id"].to_numpy()
-    lasts = block_pdf["last_doc_id"].to_numpy()
-    if len(firsts) > 1 and not (firsts[1:] > lasts[:-1]).all():
+    block doc ranges within a term would silently drop or duplicate
+    docs."""
+    if len(firsts) > 1 and not ((firsts[1:] > lasts[:-1]) | new_term[1:]).all():
         raise ValueError(
             "posting blocks overlap in doc_id; index was built with "
             "url_ordered=True on a non-url-sorted pages table"
         )
-    ids = decode_doc_ids_stream(block_pdf["doc_ids_vb"])
+    ids = decode_doc_ids_stream(ids_vb)
     if not len(ids):
         z = np.empty(0, dtype=np.int64)
         return z, z, z
-    tfs = decode_varbyte_stream(block_pdf["tfs_vb"])
-    dls = decode_varbyte_stream(block_pdf["doc_lens_vb"])
+    tfs = decode_varbyte_stream(tfs_vb)
+    dls = decode_varbyte_stream(dls_vb)
     return ids, tfs, dls
+
+
+def score_parts(tfs: np.ndarray, dls: np.ndarray, avgdl: float) -> np.ndarray:
+    """idf-free BM25 score parts: elementwise, so a part's bits do not
+    depend on which postings it was computed with."""
+    k1, b = spec.K1, spec.B
+    return (tfs * (k1 + 1.0)) / (tfs + k1 * (1.0 - b + b * dls / avgdl))
+
+
+def decode_term_postings_raw(
+    block_pdf: pd.DataFrame,
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """(doc_ids, tfs, doc_lens) of one term's blocks, doc_ids ascending."""
+    block_pdf = block_pdf.sort_values(["shard", "first_doc_id"])
+    return _decode_blocks(
+        block_pdf["first_doc_id"].to_numpy(),
+        block_pdf["last_doc_id"].to_numpy(),
+        np.zeros(len(block_pdf), dtype=bool),
+        block_pdf["doc_ids_vb"],
+        block_pdf["tfs_vb"],
+        block_pdf["doc_lens_vb"],
+    )
 
 
 def decode_term_postings_stream(
     block_pdf: pd.DataFrame, avgdl: float
 ) -> tuple[np.ndarray, np.ndarray]:
     """(doc_ids, idf-free BM25 score parts) of one term's blocks: the raw
-    decode plus the score-part expression.  Every scoring path (Spark
-    batch, serve, stats) decodes through here, so per-term score parts
-    are bit-identical across them."""
+    decode plus score_parts.  The serving searcher decodes through here;
+    the Spark unit scan through decode_unit_postings_stream, whose
+    per-term arrays are bit-identical."""
     ids, tfs, dls = decode_term_postings_raw(block_pdf)
-    k1, b = spec.K1, spec.B
-    return ids, (tfs * (k1 + 1.0)) / (tfs + k1 * (1.0 - b + b * dls / avgdl))
+    return ids, score_parts(tfs, dls, avgdl)
+
+
+def _decode_unit(tbl) -> tuple[list[str], np.ndarray, tuple]:
+    """(terms ascending, per-term value bounds, (doc_ids, tfs, doc_lens))
+    of one unit's block table (POSTINGS_READ_COLS, any row order): one
+    sort by (term, first_doc_id), then one stream decode per column
+    straight from the Arrow values buffers."""
+    import pyarrow.compute as pc
+
+    n = tbl.num_rows
+    if n == 0:
+        z = np.empty(0, dtype=np.int64)
+        return [], np.zeros(1, dtype=np.int64), (z, z, z)
+    tbl = tbl.sort_by(
+        [("term", "ascending"), ("first_doc_id", "ascending")]
+    ).combine_chunks()
+    term_col = tbl.column("term").chunk(0)
+    new_term = np.ones(n, dtype=bool)
+    new_term[1:] = pc.not_equal(
+        term_col.slice(1), term_col.slice(0, n - 1)
+    ).to_numpy(zero_copy_only=False)
+    starts = np.flatnonzero(new_term)
+    col = {c: tbl.column(c).chunk(0) for c in POSTINGS_READ_COLS[1:]}
+    cols = _decode_blocks(
+        col["first_doc_id"].to_numpy(),
+        col["last_doc_id"].to_numpy(),
+        new_term,
+        col["doc_ids_vb"],
+        col["tfs_vb"],
+        col["doc_lens_vb"],
+    )
+    vb = block_value_starts(col["doc_ids_vb"])[np.append(starts, n)]
+    return term_col.take(starts).to_pylist(), vb, cols
+
+
+def decode_unit_postings_raw(tbl) -> dict[str, tuple]:
+    """term -> (doc_ids, tfs, doc_lens) for every term of one unit's block
+    table, in ascending term order; the arrays are views into one
+    unit-wide decode, equal to decode_term_postings_raw per term."""
+    terms, vb, cols = _decode_unit(tbl)
+    return {
+        t: tuple(a[vb[i] : vb[i + 1]] for a in cols) for i, t in enumerate(terms)
+    }
+
+
+def decode_unit_postings_stream(tbl, avgdl: float) -> dict[str, tuple]:
+    """term -> (doc_ids, score parts) for every term of one unit's block
+    table, in ascending term order: score parts are computed once for the
+    whole unit and are bit-identical to decode_term_postings_stream."""
+    terms, vb, (ids, tfs, dls) = _decode_unit(tbl)
+    parts = score_parts(tfs, dls, avgdl)
+    return {
+        t: (ids[vb[i] : vb[i + 1]], parts[vb[i] : vb[i + 1]])
+        for i, t in enumerate(terms)
+    }
 
 
 def _taat_select(u: np.ndarray, acc: np.ndarray, k: int) -> list[tuple[int, float]]:

@@ -9,17 +9,20 @@ stats.*, simalt, synonyms) therefore runs the same per-unit steps:
 
   1. read the queried terms' blocks from the unit's directory (pyarrow,
      term-isin pushdown: term-sorted files prune to a few row groups);
-  2. decode each term once, with a caller-supplied decoder
-     (operators.topk.decode_term_postings_*, which own the block-overlap
-     check);
+  2. decode the whole block table at once with a caller-supplied unit
+     decoder (operators.topk.decode_unit_postings_*: one sort, one
+     block-overlap check and one varbyte pass per column straight from
+     the Arrow buffers, split into per-term arrays in ascending term
+     order);
   3. read the unit's tombstones (operators/deletes.py) over the doc range
      of the blocks it just read.
 
-This module owns those steps and the one-unit-per-task launch; a plan
+This module owns those steps and the launch: unit i is partition i of a
+JVM-side `range(0, n, 1, n)`, so each task scans exactly one unit and the
+plan has no unit-list exchange (nor a driver-pickled unit list).  A plan
 supplies only a decoder and an evaluator over the decoded unit.  Posting
-payload bytes never leave the task that reads them: the plan's input is
-the metadata-scale unit list, and its output is whatever narrow rows the
-evaluator yields.
+payload bytes never leave the task that reads them: the plan's only output
+is whatever narrow rows the evaluator yields.
 """
 
 from __future__ import annotations
@@ -51,15 +54,16 @@ def shard_units(cat: Catalog, reg: dict) -> list[str]:
 def decoded_units(
     paths: Iterable[str],
     terms: list[str],
-    decode: Callable[[pd.DataFrame], tuple],
+    decode: Callable[[object], dict],
     del_paths: list[str],
 ) -> Iterator[tuple[dict, object]]:
     """Executor side: (tdata, deleted) per unit that holds any of `terms`.
 
-    tdata maps each present term to decode(its block frame), in ascending
-    term order — the float accumulation order every scorer relies on.
-    deleted is the unit's sorted tombstoned doc ids, or None when there
-    are none."""
+    tdata = decode(the unit's pyarrow block table): each present term ->
+    its decoded arrays, in ascending term order (the float accumulation
+    order every scorer relies on).  deleted is the unit's sorted
+    tombstoned doc ids, or None when there are none."""
+    import pyarrow.compute as pc
     import pyarrow.dataset as pds
 
     for path in paths:
@@ -68,15 +72,13 @@ def decoded_units(
         )
         if tbl.num_rows == 0:
             continue
-        bl = tbl.to_pandas()
-        bl["shard"] = 0  # constant within a unit (block sort key)
-        tdata = {t: decode(g) for t, g in bl.groupby("term", sort=True)}
+        tdata = decode(tbl)
         deleted = None
         if del_paths:
             d = read_deleted_ids(
                 del_paths,
-                int(bl["first_doc_id"].min()),
-                int(bl["last_doc_id"].max()),
+                pc.min(tbl.column("first_doc_id")).as_py(),
+                pc.max(tbl.column("last_doc_id")).as_py(),
             )
             deleted = d if len(d) else None
         yield tdata, deleted
@@ -87,7 +89,7 @@ def scan_units(
     units: list[str],
     terms: list[str],
     del_paths: list[str],
-    decode: Callable[[pd.DataFrame], tuple],
+    decode: Callable[[object], dict],
     evaluate: Callable[[dict, object], Iterable[pd.DataFrame]],
     schema: str,
 ) -> DataFrame:
@@ -100,11 +102,9 @@ def scan_units(
     wall on 1-2 busy cores at 8 slots)."""
 
     def run(pdfs: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        paths = (p for pdf in pdfs for p in pdf["path"])
+        paths = (units[i] for pdf in pdfs for i in pdf["id"])
         for tdata, deleted in decoded_units(paths, terms, decode, del_paths):
             yield from evaluate(tdata, deleted)
 
-    units_df = spark.createDataFrame(
-        [(u,) for u in units], "path string"
-    ).repartition(len(units))
-    return units_df.mapInPandas(run, schema=schema)
+    n = len(units)
+    return spark.range(0, n, 1, max(n, 1)).mapInPandas(run, schema=schema)

@@ -6,8 +6,8 @@ Two paths, both returning (query_id, rank, doc_id, score [, url]):
     pruned: query terms are a handful of literals against a vocab-scale
     term-sorted table), then SCAN-SIDE scoring (operators/unitscan): one
     task per (segment, doc-range shard) opens its own shard directory with
-    pyarrow, reads only the query terms' row groups, decodes each queried
-    term's postings ONCE, and scores each DISTINCT term set of the batch with
+    pyarrow, reads only the query terms' row groups, decodes them in ONE
+    Arrow pass per unit, and scores each DISTINCT term set of the batch with
     the vectorized batch scorer (operators.topk.BatchScorer: one dense
     score vector per term hoisted over the shard's bounded doc range,
     per-set elementwise add + top-k select; budget-gated scatter/sparse
@@ -17,8 +17,9 @@ Two paths, both returning (query_id, rank, doc_id, score [, url]):
     expanded after the global merge by a broadcast join on the
     metadata-scale (set_idx, query_id) map.  Only k narrow rows per (set,
     shard) ever leave the task.  Posting payload bytes NEVER enter a Spark
-    exchange; the only shuffles in the plan carry the metadata-scale unit
-    list and the k-row partials for the global window merge.
+    exchange: the units come from a JVM-side range (one partition per
+    unit), and the only shuffle in the plan carries the k-row partials
+    for the global window merge.
   * oracle — exhaustive DataFrame scoring over the staged posting rows
     (operators.topk.exhaustive_topk), used by tests and the driver gate.
 
@@ -45,7 +46,7 @@ from .. import spec
 from ..operators.deletes import deleted_dir_paths
 from ..operators.topk import (
     BatchScorer,
-    decode_term_postings_stream,
+    decode_unit_postings_stream,
     exhaustive_topk,
 )
 from ..operators.unitscan import scan_units, shard_units
@@ -234,14 +235,17 @@ def topk(
     if with_url or fields is not None:
         empty_schema += ", url string"
     empty_schema += ", score double"
-    extra_fields = (
-        [c for c in fields.columns if c != "url"] if fields is not None else []
-    )
-    empty = spark.createDataFrame([], empty_schema)
-    if extra_fields:
-        empty = empty.join(fields.limit(0).drop("url"), how="cross").select(
-            "query_id", "rank", "doc_id", "url", "score", *extra_fields
-        )
+
+    def empty() -> DataFrame:
+        # built only on the no-hit returns: createDataFrame is a py4j
+        # round trip the scoring path has no use for
+        out = spark.createDataFrame([], empty_schema)
+        extra = [c for c in fields.columns if c != "url"] if fields is not None else []
+        if extra:
+            out = out.join(fields.limit(0).drop("url"), how="cross").select(
+                "query_id", "rank", "doc_id", "url", "score", *extra
+            )
+        return out
 
     qtoks = {qid: sorted(set(spec.tokenize(text))) for qid, text in queries.items()}
     qexcl = {
@@ -253,7 +257,7 @@ def topk(
         | {t for toks in qexcl.values() for t in toks}
     )
     if not any(qtoks.values()):
-        return empty
+        return empty()
     idf = lexicon_idf(cat, reg, all_terms)
     if idf_override is not None:
         # federated scoring (plans/federate): LOCAL term presence decides
@@ -283,7 +287,7 @@ def topk(
         qmap.append((sid, qid))
     units = shard_units(cat, reg)
     if not setplan or not units:
-        return empty
+        return empty()
 
     # sets as an ORDERED list: the shuffle key is the set's integer
     # position (4 bytes through the exchange, int window key), mapped back
@@ -325,7 +329,7 @@ def topk(
 
     partials = scan_units(
         spark, units, corpus_terms, deleted_dir_paths(cat, reg),
-        lambda g: decode_term_postings_stream(g, avgdl), score_unit,
+        lambda tbl: decode_unit_postings_stream(tbl, avgdl), score_unit,
         "set_idx int, doc_id long, score double",
     )
     if _partials_only:  # diagnostic: scoring stage without the global merge

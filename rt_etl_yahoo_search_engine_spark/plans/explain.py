@@ -13,9 +13,9 @@ intersects the query AND whose [first_doc_id, last_doc_id] block range
 contains the target doc (both bounds are parquet column stats on files
 sorted by (term, first_doc_id)).  Exactly the touched blocks decode.
 
-Bit-identity: tf_norm is computed with the IDENTICAL numpy elementwise
-expression (same int64→float64 promotion, same op order) as the scorer's
-decode (operators/topk.decode_term_postings_stream), and the total sums
+Bit-identity: tf_norm is computed by the scorers' own numpy elementwise
+expression (operators/topk.score_parts: same int64→float64 promotion,
+same op order), and the total sums
 weights in ascending term order — the accumulation order both the batch
 scorer and the serving scorer use — so ``explain()['score']`` equals the
 search paths' score for the same (query, doc) to the last bit (asserted
@@ -29,6 +29,7 @@ import numpy as np
 from .. import spec
 from ..operators.codec import decode_doc_ids, decode_varbyte
 from ..operators.deletes import deleted_dir_paths, read_deleted_ids
+from ..operators.topk import score_parts
 from ..sources.catalog import Catalog
 
 
@@ -56,7 +57,6 @@ def _doc_hits(cat: Catalog, reg: dict, terms: list[str], doc_id: int,
     holding the doc decodes per (term, segment)."""
     import pyarrow.dataset as ds
 
-    k1, b = spec.K1, spec.B
     hits: dict[str, dict] = {}
     for seg in reg["segments"]:
         data = ds.dataset(cat.path(seg["dir"])).to_table(
@@ -79,11 +79,8 @@ def _doc_hits(cat: Catalog, reg: dict, terms: list[str], doc_id: int,
                 continue
             tfs = decode_varbyte(tfs_vb)
             dls = decode_varbyte(dls_vb)
-            # identical elementwise expression (and dtype promotion) as
-            # operators/topk.decode_term_postings_stream -> bit-identical
-            parts = (tfs * (k1 + 1.0)) / (
-                tfs + k1 * (1.0 - b + b * dls / avgdl)
-            )
+            # the scorers' own elementwise expression -> bit-identical
+            parts = score_parts(tfs, dls, avgdl)
             hits[t] = {
                 "tf": int(tfs[i]),
                 "doc_len": int(dls[i]),

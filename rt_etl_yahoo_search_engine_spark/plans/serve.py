@@ -34,8 +34,8 @@ searcher-node role, runnable against any index the build wrote:
 
 One process here holds every shard, so the S-way merge is local; the float
 sum order per doc (ascending term order) matches the distributed path's
-``groupby("term", sort=True)`` accumulation order, keeping scores
-bit-identical.
+accumulation order (its unit decode yields terms ascending), keeping
+scores bit-identical.
 
 The reference answers a query in "order of seconds" end-to-end
 (ref: README.md:18-19); this path answers rank-identical BM25 top-10 over

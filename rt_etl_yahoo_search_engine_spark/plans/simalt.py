@@ -5,7 +5,7 @@ per field (the `similarity` setting: `LMDirichlet`, `classic` TF-IDF —
 LMDirichletSimilarity / ClassicSimilarity).  The posting lists don't
 change — only the per-term weight formula does — so these run as
 alternative weight kernels over the IDENTICAL pruned posting reads the
-BM25 paths use (operators/unitscan + topk.decode_term_postings_raw), with per-term
+BM25 paths use (operators/unitscan + topk.decode_unit_postings_raw), with per-term
 corpus statistics (df, cf) from the lexicon sidecar and (N, total
 tokens) from the registry.
 
@@ -42,7 +42,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from .. import spec
-from ..operators.topk import decode_term_postings_raw
+from ..operators.topk import decode_unit_postings_raw
 from ..operators.unitscan import scan_units
 from ..sources.catalog import Catalog
 from .stats import _plan
@@ -133,7 +133,7 @@ def alt_topk(
             )
 
     rel = scan_units(
-        spark, units, corpus_terms, del_paths, decode_term_postings_raw,
+        spark, units, corpus_terms, del_paths, decode_unit_postings_raw,
         score_unit, "set_idx int, doc_id long, score double",
     )
     w = Window.partitionBy("query_id").orderBy(

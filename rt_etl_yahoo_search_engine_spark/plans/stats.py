@@ -36,7 +36,7 @@ from pyspark.sql import functions as F
 
 from .. import spec
 from ..operators.deletes import deleted_dir_paths
-from ..operators.topk import decode_term_postings_raw, decode_term_postings_stream
+from ..operators.topk import decode_unit_postings_raw, decode_unit_postings_stream
 from ..operators.unitscan import scan_units, shard_units
 from ..sources.catalog import Catalog
 from .bm25 import lexicon_idf
@@ -140,7 +140,7 @@ def match_counts(
             yield pd.DataFrame(rows, columns=["set_idx", "n"])
 
     partials = scan_units(
-        spark, units, corpus_terms, del_paths, decode_term_postings_raw,
+        spark, units, corpus_terms, del_paths, decode_unit_postings_raw,
         count_unit, "set_idx int, n long",
     )
     return (
@@ -171,7 +171,7 @@ def match_docs(
                 yield pd.DataFrame({"set_idx": si, "doc_id": ids})
 
     pairs = scan_units(
-        spark, units, corpus_terms, del_paths, decode_term_postings_raw,
+        spark, units, corpus_terms, del_paths, decode_unit_postings_raw,
         pair_unit, "set_idx int, doc_id long",
     )
     return pairs.join(F.broadcast(map_df), "set_idx").select("query_id", "doc_id")
@@ -259,7 +259,8 @@ def score_docs(
 
     rel = scan_units(
         spark, units, corpus_terms, del_paths,
-        lambda g: decode_term_postings_stream(g, avgdl), score_unit, rel_schema,
+        lambda tbl: decode_unit_postings_stream(tbl, avgdl),
+        score_unit, rel_schema,
     )
     out_cols = ["query_id", "doc_id", "score"] + (
         ["n_matched"] if with_matched else []
@@ -293,7 +294,7 @@ def term_norms(
     set_terms, map_df, units, corpus_terms, del_paths, _idf, avgdl = plan
     rel = scan_units(
         spark, units, corpus_terms, del_paths,
-        lambda g: decode_term_postings_stream(g, avgdl),
+        lambda tbl: decode_unit_postings_stream(tbl, avgdl),
         lambda tdata, deleted: _term_rows(set_terms, tdata, deleted, "tfnorm"),
         "set_idx int, term string, doc_id long, tfnorm double",
     )
@@ -322,7 +323,7 @@ def term_raw(
         return empty
     set_terms, map_df, units, corpus_terms, del_paths, _idf, _avgdl = plan
     rel = scan_units(
-        spark, units, corpus_terms, del_paths, decode_term_postings_raw,
+        spark, units, corpus_terms, del_paths, decode_unit_postings_raw,
         lambda tdata, deleted: _term_rows(set_terms, tdata, deleted, "tf"),
         "set_idx int, term string, doc_id long, tf long",
     )

@@ -39,7 +39,7 @@ from pyspark.sql import functions as F
 
 from .. import spec
 from ..operators.deletes import deleted_dir_paths
-from ..operators.topk import decode_term_postings_raw
+from ..operators.topk import decode_unit_postings_raw
 from ..operators.unitscan import scan_units, shard_units
 from ..sources.catalog import Catalog
 from .bm25 import lexicon_idf
@@ -138,7 +138,7 @@ def synonym_topk(
 
     rel = scan_units(
         spark, units, corpus_terms, deleted_dir_paths(cat, reg),
-        decode_term_postings_raw, blend_unit,
+        decode_unit_postings_raw, blend_unit,
         "query_id string, doc_id long, score double",
     )
     w = Window.partitionBy("query_id").orderBy(

@@ -9,15 +9,39 @@ from pyspark.sql import SparkSession
 PYBIN = "/root/.pyenv/shims/python3"
 
 
+def host_cores() -> int:
+    """Cores this process may run on (its CPU affinity, not the machine's
+    core count)."""
+    return len(os.sched_getaffinity(0))
+
+
+def host_driver_mem() -> str:
+    """Driver heap for this host: a quarter of MemAvailable in 512 MB
+    steps, within [1 GB, 4 GB] (the heap holds plans and collected
+    results; task memory lives in the Python workers)."""
+    avail_mb = 4096 * 4
+    with open("/proc/meminfo") as f:
+        for line in f:
+            if line.startswith("MemAvailable:"):
+                avail_mb = int(line.split()[1]) // 1024
+    return f"{max(1024, min(4096, avail_mb // 4 // 512 * 512))}m"
+
+
 def get_spark(
     app: str = "rt-etl-spark-engine",
     master: str | None = None,
     shuffle_partitions: int | None = None,
-    driver_mem: str = "24g",
+    driver_mem: str | None = None,
 ) -> SparkSession:
-    cores = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    """Local session; defaults follow the host: master local[cores]
+    (SPARK_GRAFT_CPUS overrides the core count) and driver heap from
+    MemAvailable.  Explicit arguments win."""
+    cores = os.environ.get("SPARK_GRAFT_CPUS") or str(host_cores())
     master = master or f"local[{cores}]"
-    n = shuffle_partitions or int(master[master.index("[") + 1 : -1].replace("*", "32"))
+    driver_mem = driver_mem or host_driver_mem()
+    n = shuffle_partitions or int(
+        master[master.index("[") + 1 : -1].replace("*", str(host_cores()))
+    )
     if os.path.exists(PYBIN):
         os.environ.setdefault("PYSPARK_PYTHON", PYBIN)
         os.environ.setdefault("PYSPARK_DRIVER_PYTHON", PYBIN)

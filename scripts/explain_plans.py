@@ -1,14 +1,16 @@
 #!/usr/bin/env python3
 """Capture physical plans of the engine's headline operators into EXPLAIN.md.
 
-Run:  /root/.pyenv/shims/python3 scripts/explain_plans.py
+Run:  python3 scripts/explain_plans.py   (from the repo root)
 
 For each headline query the script records `.explain(mode="formatted")`
 output plus a short commentary on the scale-relevant properties to check:
 pushed filters at the parquet scan (partition/row-group pruning), broadcast
 vs shuffle joins, whole-stage codegen spans, and where the Arrow boundaries
 sit.  The output is committed as EXPLAIN.md so plan regressions show up in
-review diffs.
+review diffs.  Only the script's own sections (matched by heading) are
+rewritten; hand-written sections keep their text and place.  Spark runs
+on local[host cores].
 """
 
 from __future__ import annotations
@@ -16,6 +18,8 @@ from __future__ import annotations
 import contextlib
 import io
 import os
+import re
+import shutil
 import sys
 import tempfile
 
@@ -39,6 +43,21 @@ def captured_plan(df) -> str:
     )
 
 
+def merge_sections(old: str, header: str, sections: list[tuple[str, str]]) -> str:
+    """EXPLAIN.md text: `header`, then the old file's sections in their
+    order with each generated one (matched by its `## ` title) replaced;
+    generated sections the old file lacks are appended."""
+    parts = re.split(r"^## ", old, flags=re.M)[1:]
+    new = dict(sections)
+    out = [header]
+    for part in parts:
+        title, _, body = part.partition("\n")
+        body = new.pop(title, body)
+        out.append(f"## {title}\n{body.rstrip()}\n")
+    out.extend(f"## {t}\n{b.rstrip()}\n" for t, b in new.items())
+    return "\n".join(out)
+
+
 def main() -> None:
     from rt_etl_yahoo_search_engine_spark import spec
     from rt_etl_yahoo_search_engine_spark.operators.index_build import build_index
@@ -48,7 +67,7 @@ def main() -> None:
 
     import __spark_entry__ as entry
 
-    spark = get_spark(app="explain", master="local[8]", shuffle_partitions=8)
+    spark = get_spark(app="explain", shuffle_partitions=8)  # host cores
     spark.sparkContext.setLogLevel("ERROR")
 
     tmp = tempfile.mkdtemp(prefix="explain_idx_")
@@ -62,11 +81,12 @@ def main() -> None:
     sections.append((
         "BM25 top-k (scan-side vectorized TAAT over compressed postings)",
         "The plan must contain NO exchange carrying posting payload bytes: "
-        "the only input is the metadata-scale (path) unit list fed "
-        "to `MapInPandas` (one task per (segment, shard) reads its own "
-        "shard directory via pyarrow with term-isin row-group pruning and "
-        "scores the whole query batch vectorized), and the only "
-        "wide exchange is the k-rows-per-(query,shard) window merge.",
+        "the only input is a `Range` with one partition per (segment, "
+        "shard) unit fed straight to `MapInPandas` (no unit-list exchange; "
+        "each task reads its own unit's shard directory via pyarrow with "
+        "term-isin row-group pruning, decodes it in one Arrow pass and "
+        "scores the whole query batch vectorized), and the only wide "
+        "exchange is the k-rows-per-(query,shard) window merge.",
         captured_plan(
             topk(spark, idx, {"q": "chicken rice", "q2": "coffee"}, k=10)
         ),
@@ -147,7 +167,7 @@ def main() -> None:
     sections.append((
         "Alternative similarity (LM-Dirichlet) over the same index",
         "Identical shape to the scan-side BM25 batch path: the only "
-        "input is the metadata-scale (path) unit list into "
+        "input is the one-partition-per-unit `Range` into "
         "`MapInPandas` (each unit reads its own shard dir with term-isin "
         "row-group pruning and emits k rows per set), the per-query map "
         "is a broadcast join, and the only wide exchange is the "
@@ -165,20 +185,25 @@ def main() -> None:
         captured_plan(entry.queries()["bm25_topk_highlight"](spark, SF_DIR)),
     ))
 
-    out = [
-        "# EXPLAIN — physical plans of the headline operators\n",
-        "Generated by `scripts/explain_plans.py` (local[8], sf=" + SF_DIR + ").",
+    header = (
+        "# EXPLAIN — physical plans of the headline operators\n\n"
+        f"Generated by `scripts/explain_plans.py` ({spark.sparkContext.master}, "
+        f"sf={os.path.basename(SF_DIR)}); sections it does not generate are "
+        "hand-written.\n"
         "Each section states the scale-critical plan properties to verify,"
-        " then the `.explain(\"formatted\")` capture.\n",
+        " then the `.explain(\"formatted\")` capture.\n"
+    )
+    path = os.path.join(REPO, "EXPLAIN.md")
+    old = open(path).read() if os.path.exists(path) else ""
+    generated = [
+        (title, f"\n{commentary}\n\n```\n{plan.rstrip()}\n```\n")
+        for title, commentary, plan in sections
     ]
-    for title, commentary, plan in sections:
-        out.append(f"## {title}\n")
-        out.append(commentary + "\n")
-        out.append("```\n" + plan.rstrip() + "\n```\n")
-    with open(os.path.join(REPO, "EXPLAIN.md"), "w") as f:
-        f.write("\n".join(out))
+    with open(path, "w") as f:
+        f.write(merge_sections(old, header, generated))
     print("wrote EXPLAIN.md")
     spark.stop()
+    shutil.rmtree(tmp, ignore_errors=True)
 
 
 if __name__ == "__main__":

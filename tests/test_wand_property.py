@@ -6,6 +6,7 @@ single-posting terms."""
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
@@ -17,9 +18,12 @@ from rt_etl_yahoo_search_engine_spark.operators.codec import (
 )
 from rt_etl_yahoo_search_engine_spark.operators.topk import (
     BatchScorer,
+    POSTINGS_READ_COLS,
     DenseScorer,
     decode_term_postings_raw,
     decode_term_postings_stream,
+    decode_unit_postings_raw,
+    decode_unit_postings_stream,
     taat_topk,
 )
 
@@ -150,20 +154,102 @@ def test_dense_equals_taat_bit_identical(c):
 _DENSE = DenseScorer()
 
 
+def _unit_table(frames: dict, order=None, chunks: int = 1) -> pa.Table:
+    """One unit's block table (as the unit scan reads it) holding every
+    term's block frame, rows in `order`, split into `chunks` record
+    batches."""
+    blocks = pd.concat(
+        [f.assign(term=t) for t, f in frames.items()], ignore_index=True
+    )
+    if order is not None:
+        blocks = blocks.iloc[order]
+    tbl = pa.Table.from_pandas(blocks[POSTINGS_READ_COLS], preserve_index=False)
+    cut = np.linspace(0, len(tbl), chunks + 1).astype(int)
+    return pa.concat_tables(
+        [tbl.slice(a, b - a) for a, b in zip(cut[:-1], cut[1:])]
+    )
+
+
+def _same_bytes(got, want) -> bool:
+    return len(got) == len(want) and all(
+        g.dtype == w.dtype and g.tobytes() == w.tobytes()
+        for g, w in zip(got, want)
+    )
+
+
+def _assert_unit_decode_identical(frames: dict, tbl: pa.Table, avgdl: float):
+    raw = decode_unit_postings_raw(tbl)
+    stream = decode_unit_postings_stream(tbl, avgdl)
+    assert list(raw) == list(stream) == sorted(frames)
+    for t, f in frames.items():
+        assert _same_bytes(raw[t], decode_term_postings_raw(f))
+        assert _same_bytes(stream[t], decode_term_postings_stream(f, avgdl))
+
+
+@settings(max_examples=100, deadline=None)
+@given(corpus(), st.randoms(use_true_random=False),
+       st.integers(min_value=1, max_value=3))
+def test_unit_decoder_identical(c, rnd, chunks):
+    """The unit decoder (one sort, one stream pass per column over the
+    Arrow buffers, per-term views) gives byte-identical (ids, tfs, dls)
+    and score parts to the per-term decoders, whatever the block row
+    order and chunking of the unit's table."""
+    _n_docs, postings, _k, block_size, _mode = c
+    frames = {
+        t: _make_blocks_pdf(1.0, *p, avgdl=25.0, block_size=block_size)
+        for t, p in postings.items()
+    }
+    order = list(range(sum(len(f) for f in frames.values())))
+    rnd.shuffle(order)
+    _assert_unit_decode_identical(frames, _unit_table(frames, order, chunks), 25.0)
+
+
+def test_unit_decoder_edge_cases():
+    """A single-block term beside multi-block terms, shuffled rows, and a
+    table with no matching terms."""
+    frames = {
+        "alpha": _make_blocks_pdf(1.0, [3, 7, 8, 20, 21, 40, 41], [1, 2, 1, 4, 1, 1, 9],
+                                  [10, 20, 10, 30, 10, 10, 50], avgdl=17.0,
+                                  block_size=2),
+        "beta": _make_blocks_pdf(1.0, [5], [3], [40], avgdl=17.0, block_size=128),
+        "gamma": _make_blocks_pdf(1.0, list(range(0, 300, 3)), [1] * 100,
+                                  [12] * 100, avgdl=17.0, block_size=8),
+    }
+    n = sum(len(f) for f in frames.values())
+    order = list(np.random.default_rng(5).permutation(n))
+    tbl = _unit_table(frames, order, chunks=2)
+    _assert_unit_decode_identical(frames, tbl, 17.0)
+    assert decode_unit_postings_raw(tbl)["beta"][0].tolist() == [5]
+    assert decode_unit_postings_raw(tbl.slice(0, 0)) == {}
+    assert decode_unit_postings_stream(tbl.slice(0, 0), 17.0) == {}
+
+
 def test_overlapping_blocks_raise():
     """The shared block decode refuses a term whose block doc ranges
     overlap (a wrong url_ordered declaration at build time) instead of
-    silently dropping or duplicating docs — for every decoder, since the
-    score-part decode goes through the raw one."""
+    silently dropping or duplicating docs — for every decoder, per-term
+    and per-unit, since they share the one check."""
     pdf = _make_blocks_pdf(1.0, [1, 5, 9, 12], [1, 2, 1, 3], [10, 20, 10, 30],
                            avgdl=25.0, block_size=2)
+    other = _make_blocks_pdf(1.0, [2, 3], [1, 1], [10, 10], avgdl=25.0,
+                             block_size=1)
     pdf.loc[1, "first_doc_id"] = 4  # blocks [1, 5] and [4, 12] overlap
-    for decode in (decode_term_postings_raw,
-                   lambda g: decode_term_postings_stream(g, 25.0)):
+    unit = _unit_table({"a": pdf, "b": other})
+    for decode, arg in (
+        (decode_term_postings_raw, pdf),
+        (lambda g: decode_term_postings_stream(g, 25.0), pdf),
+        (decode_unit_postings_raw, unit),
+        (lambda g: decode_unit_postings_stream(g, 25.0), unit),
+    ):
         with pytest.raises(ValueError, match="posting blocks overlap"):
-            decode(pdf)
+            decode(arg)
     pdf.loc[1, "first_doc_id"] = 9  # disjoint again: decodes cleanly
     assert decode_term_postings_raw(pdf)[0].tolist() == [1, 5, 9, 12]
+    # block ranges only have to be disjoint WITHIN a term: "b"'s blocks
+    # sit inside "a"'s range
+    tdata = decode_unit_postings_raw(_unit_table({"a": pdf, "b": other}))
+    assert tdata["a"][0].tolist() == [1, 5, 9, 12]
+    assert tdata["b"][0].tolist() == [2, 3]
 
 
 def test_dense_sparse_fallback_identical():
